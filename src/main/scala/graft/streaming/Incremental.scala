@@ -3,27 +3,39 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incremental aggregate maintenance (beyond-reference): keep a persistent
-  * per-key aggregate table ("materialized view") up to date as new event
-  * files arrive, WITHOUT ever recomputing history — the streaming upsert
-  * pattern every lakehouse MV refresh builds on.
+/** Incremental maintenance (beyond-reference): keep persistent state tables
+  * ("materialized views") up to date as new files arrive, WITHOUT ever
+  * recomputing history — the streaming upsert pattern every lakehouse MV
+  * refresh builds on. Nine state families (aggregate, curation, near-dup,
+  * span, embedding near-dup, join, session, CDC, connected components,
+  * decontamination) share one lease, one shard-merge kernel and one
+  * footer/listing reader.
   *
-  * Design, and why it scales:
-  *  - The state table is hash-sharded on the key
-  *    (`shard = pmod(user_id, nShards)`) and written `partitionBy(shard)`
-  *    with `partitionOverwriteMode=dynamic`: a micro-batch rewrites ONLY the
-  *    shards its keys touch. Per-batch cost is proportional to the touched
-  *    key range, never to total state size.
-  *  - Each micro-batch folds in via partial agg (map-side combined delta:
-  *    one row per key in the batch) + a shard-pruned read of existing state
-  *    + re-agg. No global shuffle of the state table.
-  *  - Idempotence: every state row carries the high-water batch id `bmax`.
-  *    foreachBatch is at-least-once on retry; a replayed batch sees
+  * THE SHARD-MERGE CONTRACT — every key-sharded surface is merged by
+  * [[shardMerge]], and only by it:
+  *  - The surface is hash-sharded on its key (`shard = pmod(key, nShards)`)
+  *    and written `partitionBy(shard)` with `partitionOverwriteMode=dynamic`:
+  *    a batch rewrites ONLY the shards its delta touches, one file per
+  *    shard. Per-batch cost follows the touched key range, never the state
+  *    size, and there is no global shuffle of the state table.
+  *  - Every state row carries the high-water batch id `bmax`. The per-shard
+  *    max is read from parquet FOOTER statistics (a few KB per file, never a
+  *    data scan; a shard-pruned scan when a file lacks stats). It is
+  *    committed WITH the shard's data file, so unlike a separately-written
+  *    manifest it can never disagree with the state it describes.
+  *  - foreachBatch is at-least-once: a replayed batch finds
   *    `bmax >= batchId` on already-applied shards and leaves them untouched,
-  *    so retries can't double-count. (The remaining window — a crash between
-  *    a shard's file rename and its visibility — is what a table format's
-  *    atomic commit log closes in production; plain parquet directories get
-  *    shard-granular idempotence.)
+  *    so retries can't double-count. Only the fresh shards are read back
+  *    (partition-pruned), folded with the batch's delta by the family's
+  *    `merge(old, delta)`, and rewritten.
+  *  - The kernel returns the write as a thunk, so the family keeps its crash
+  *    order: every surface's delta derives from state the batch has not yet
+  *    changed, and the LAST surface written is the batch's commit marker.
+  *    A crash-retry at any point then recomputes bit-identical deltas, and
+  *    the surfaces that already committed skip via their own bmax.
+  *  - The remaining window — a crash between a shard's file rename and its
+  *    visibility — is what a table format's atomic commit log closes in
+  *    production; plain parquet directories get shard-granular idempotence.
   *
   * Counts are maintained in exact integers (cents quantization), so the
   * maintained view equals the from-scratch batch aggregate bit-for-bit —
@@ -47,31 +59,15 @@ object Incremental {
     val delta = batch
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-      .withColumn("bmax", lit(batchId))
       .withColumn("shard", pmod(col("user_id"), lit(nShards)).cast("long"))
-    val touched = delta.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue) // bounded by nShards
-    if (touched.isEmpty) return
-    val existing = parquetIfAny(spark, stateDir)
-      .map(_.filter(col("shard").isin(touched.toSeq: _*))) // partition-pruned
-      .getOrElse(spark.emptyDataFrame.select(lit(0L).as("user_id"),
-        lit(0L).as("n"), lit(0L).as("cents"), lit(-1L).as("bmax"),
-        lit(0L).as("shard")).limit(0))
-    val ex = existing.persist()
-    val applied = ex.groupBy("shard").agg(max("bmax").as("b"))
-      .filter(col("b") >= batchId)
-      .select("shard").collect().map(_.getAs[Number](0).longValue).toSet
-    val fresh = touched.filterNot(applied).toSeq
-    if (fresh.nonEmpty) {
-      val merged = ex.filter(col("shard").isin(fresh: _*))
-        .unionByName(delta.filter(col("shard").isin(fresh: _*)))
+    val empty = spark.emptyDataFrame.select(lit(0L).as("user_id"),
+      lit(0L).as("n"), lit(0L).as("cents"), lit(-1L).as("bmax"),
+      lit(0L).as("shard")).limit(0)
+    shardMerge(spark, stateDir, "shard", batchId, delta, empty) { (old, d) =>
+      old.select("user_id", "n", "cents", "shard").unionByName(d)
         .groupBy("user_id", "shard")
-        .agg(sum("n").as("n"), sum("cents").as("cents"),
-          max("bmax").as("bmax"))
-        .select("user_id", "n", "cents", "bmax", "shard")
-      merged.write.mode("overwrite").partitionBy("shard").parquet(stateDir)
-    }
-    ex.unpersist()
+        .agg(sum("n").as("n"), sum("cents").as("cents"))
+    }.foreach(_())
   }
 
   /** The shared maintenance loop every maintain* wrapper runs: stream the
@@ -103,7 +99,7 @@ object Incremental {
       nShards: Int = 16): DataFrame = {
     maintainLoop(spark, srcDir, checkpointDir, schema)(
       applyBatch(spark, _, _, stateDir, nShards))
-    spark.read.parquet(servingPath(stateDir, stateDir))
+    spark.read.parquet(servingPath(spark, stateDir, stateDir))
       .select("user_id", "n", "cents")
   }
 
@@ -133,17 +129,9 @@ object Incremental {
   // free). So incremental == from-scratch batch recompute, bit-for-bit —
   // which is exactly what the q301 oracle checks.
   //
-  // Idempotence (at-least-once foreachBatch retries): the key-index merge
-  // is a MIN — re-merging an already-applied batch is a no-op by algebra —
-  // and each shard carries the high-water batch id `bmax`, so applied
-  // shards are skipped outright. Deltas are written per-(batch, shard)
-  // partition with dynamic overwrite, and written BEFORE the key index:
-  // on a crash-retry the state is unchanged, the recomputed delta is
-  // bit-identical, and the partition overwrite replaces rather than
-  // appends. (The remaining window — a crash between the delta write and
-  // the state write being made visible — is the same plain-parquet
-  // atomicity caveat as [[applyBatch]]; a table format's commit log closes
-  // it in production.)
+  // Crash order (see the header): the funnel deltas land per-(batch,
+  // shard) partition BEFORE the key index, whose bmax commits the batch;
+  // the key-index merge is also a MIN, so re-merging is a no-op by algebra.
   //
   // The q300 span screen (≤50% of tokens inside corpus-duplicated
   // 15-grams) is NOT folded into this operator: it is a corpus-GLOBAL
@@ -211,33 +199,37 @@ object Incremental {
   // 0.03–0.4 s each, i.e. fixed scheduling costs dominating; disabling
   // AQE just for the merge bodies cut the warm per-batch wall ~21%
   // (curation), ~11% (near-dup), ~5% (span). Serving reads and every
-  // non-merge query keep AQE (Engine.configure). Deployments whose
-  // batches are LARGE enough for runtime skew handling to pay restore it
-  // with SPARK_GRAFT_STATE_AQE=1 — the right setting falls out of batch
-  // volume, not cluster size. The flag is session-global, so while a
-  // merge is in flight a concurrently-planned query on the same session
-  // may also plan without AQE — that affects plan shape only, never
-  // results, and maintainers are single-writer by lease anyway.
+  // non-merge query keep AQE (Engine.configure). The flag is
+  // session-global, so while a merge is in flight a concurrently-planned
+  // query on the same session may also plan without AQE — that affects
+  // plan shape only, never results.
 
   // Applied by [[withLease]] (every merge/compaction entry point runs
   // under a lease, and ONLY those). A global depth counter makes nested
   // leases (funnels, auto-compaction under the maintainer's own lease)
   // and concurrent maintainers of DIFFERENT dirs restore the session
-  // flag exactly once, at the outermost exit — without it, interleaved
-  // save/restore could leave the session's AQE off permanently.
-  private val mergeConfDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var mergeConfSaved = "true"
+  // flag exactly once, at the outermost exit. The depth change and the
+  // conf save/restore happen under ONE lock: with them apart, a thread
+  // entering between another's last decrement and its restore would save
+  // "false" and leave the session's AQE off for good.
+  private val mergeConfLock = new Object
+  private var mergeConfDepth = 0
+  private var mergeConfSaved = "true"
   private def withMergeConf[T](body: => T): T = {
-    if (sys.env.get("SPARK_GRAFT_STATE_AQE").contains("1")) return body
     val spark = SparkSession.active
     val k = "spark.sql.adaptive.enabled"
-    if (mergeConfDepth.getAndIncrement() == 0) {
-      mergeConfSaved = spark.conf.get(k)
-      spark.conf.set(k, "false")
+    mergeConfLock.synchronized {
+      if (mergeConfDepth == 0) {
+        mergeConfSaved = spark.conf.get(k)
+        spark.conf.set(k, "false")
+      }
+      mergeConfDepth += 1
     }
     try body
-    finally if (mergeConfDepth.decrementAndGet() == 0)
-      spark.conf.set(k, mergeConfSaved)
+    finally mergeConfLock.synchronized {
+      mergeConfDepth -= 1
+      if (mergeConfDepth == 0) spark.conf.set(k, mergeConfSaved)
+    }
   }
 
   /** Run independent per-batch writes concurrently (guide §2.6): Spark
@@ -245,20 +237,20 @@ object Incremental {
     * state-surface writes are commit-latency-bound — overlapping them
     * back-fills each write's driver-side commit gap with the others'
     * tasks. Callers pass ONLY writes whose mutual order the crash
-    * contract leaves free; a failure propagates and fails the batch
+    * contract leaves free. Every write is awaited before the first
+    * failure is rethrown, so no write outlives a failed batch's lease
     * (partial per-batch partitions are overwritten on retry, as always).
     */
-  private def runWrites(writes: Seq[() => Unit]): Unit =
+  private[graft] def runWrites(writes: Seq[() => Unit]): Unit =
     if (writes.size <= 1) writes.foreach(_())
     else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
       try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(writes.map(w =>
-            scala.concurrent.Future(w()))),
-          scala.concurrent.duration.Duration.Inf)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val fs = writes.map(w => Future(w()))
+        fs.foreach(Await.ready(_, scala.concurrent.duration.Duration.Inf))
+        fs.foreach(_.value.get.get) // the first failure, once all are done
       } finally pool.shutdown()
     }
 
@@ -347,50 +339,106 @@ object Incremental {
     }
   }
 
-  /** Per-shard high-water batch id read from parquet FOOTER statistics —
-    * O(files) footer reads (a few KB each), never a data scan of the state
-    * table. The footer max is exact and crash-consistent: it is committed
-    * WITH the shard's data file, so unlike a separately-written manifest it
-    * can never disagree with the state it describes (a manifest written
-    * after the state opens a replay window where a stale "not applied"
-    * entry re-derives the delta against already-merged state and overwrites
-    * the true delta with zeros). Returns None when any file lacks the
-    * column's stats (caller falls back to the pruned scan). On an object
-    * store a table format's column-stats manifest plays this role; the
-    * directory walk here is the plain-parquet analogue.
+  /** The shard-merge kernel (contract in the object header). Takes the
+    * touched shards from the caller or collects them from `delta`, reads
+    * the per-shard `bmax` from footers (pruned-scan fallback when stats
+    * are missing), keeps the fresh shards, reads the old state pruned to
+    * them (`empty` — a zero-row frame with the stored schema — when none
+    * exists yet) and applies `merge(old, delta)`. Returns the write as a
+    * thunk — None when no touched shard is fresh — so the caller keeps
+    * its crash order. The write stamps `bmax`, projects onto `empty`'s
+    * columns (a merge may carry extra columns for the caller's other
+    * surfaces) and unpersists the merge result once written.
     */
-  private def shardFooterMax(spark: SparkSession, stateDir: String,
-      partCol: String, column: String): Option[Map[Long, Long]] = {
-    import scala.jdk.CollectionConverters._
-    val root = new java.io.File(stateDir)
-    if (!root.exists()) return Some(Map.empty)
-    val conf = spark.sessionState.newHadoopConf()
-    val perShard = scala.collection.mutable.Map.empty[Long, Long]
-    for (d <- root.listFiles()
-         if d.isDirectory && d.getName.startsWith(s"$partCol=")) {
-      val shard = d.getName.stripPrefix(s"$partCol=").toLong
-      for (f <- d.listFiles() if f.getName.endsWith(".parquet")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getPath), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val maxes =
-          try reader.getFooter.getBlocks.asScala.flatMap { blk =>
-            blk.getColumns.asScala
-              .filter(_.getPath.toDotString == column)
-              .map(_.getStatistics)
-              .map(st => if (st == null || !st.hasNonNullValue) None
-                else Some(st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-          } finally reader.close()
-        if (maxes.exists(_.isEmpty)) return None // stats missing: fall back
-        val fm = maxes.flatten
-        if (fm.nonEmpty) {
-          val m = fm.max
-          perShard(shard) = perShard.get(shard).fold(m)(math.max(_, m))
-        }
+  private def shardMerge(spark: SparkSession, dir: String, shardCol: String,
+      batchId: Long, delta: DataFrame, empty: DataFrame,
+      touched: Seq[Long] = null)(
+      merge: (DataFrame, DataFrame) => DataFrame): Option[() => Unit] = {
+    val shards = Option(touched).getOrElse(longs(delta.select(shardCol).distinct()))
+    if (shards.isEmpty) return None
+    val state = parquetIfAny(spark, dir)
+    val stats = footers(spark, dir, "bmax")
+    val bmax: Map[Long, Long] =
+      if (stats.forall(_._3.isDefined)) stats.flatMap { case (segs, _, mx) =>
+        segs.find(_.startsWith(s"$shardCol=")).map(
+          _.stripPrefix(s"$shardCol=").toLong -> mx.get)
+      }.groupMapReduce(_._1)(_._2)(math.max)
+      else state.fold(Map.empty[Long, Long]) { st =>
+        st.filter(col(shardCol).isin(shards: _*))
+          .groupBy(shardCol).agg(max("bmax")).collect()
+          .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+          .toMap
       }
-    }
-    Some(perShard.toMap)
+    val fresh = shards.filterNot(s => bmax.get(s).exists(_ >= batchId))
+    if (fresh.isEmpty) return None
+    val inFresh = col(shardCol).isin(fresh: _*)
+    val out = merge(state.getOrElse(empty).filter(inFresh), delta.filter(inFresh))
+    Some(() =>
+      try out.withColumn("bmax", lit(batchId)).select(empty.columns.toSeq.map(col): _*)
+        .repartition(col(shardCol))
+        .write.mode("overwrite").partitionBy(shardCol).parquet(dir)
+      finally out.unpersist(blocking = false))
   }
+
+  /** The first column of a small collected frame (shard ids, bounded by
+    * the shard count) as longs.
+    */
+  private def longs(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getAs[Number](0).longValue).toSeq
+
+  /** THE listing reader: every parquet data file under `dir`, through the
+    * Hadoop FileSystem (so it works on any filesystem Spark reads), as the
+    * directory segments below `dir` plus the file status. Like Spark's own
+    * file index it skips every path segment below `dir` that starts with
+    * `_` or `.` — `_temporary/`, `.spark-staging-*`, retirees — so crash
+    * debris is never counted. Lazy, so an existence probe stops at the
+    * first file; a missing `dir` lists nothing.
+    */
+  private def dataFiles(spark: SparkSession,
+      dir: String): Iterator[(List[String], org.apache.hadoop.fs.FileStatus)] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path, segs: List[String])
+        : Iterator[(List[String], org.apache.hadoop.fs.FileStatus)] =
+      fs.listStatus(p).iterator.filterNot(st => "_.".contains(st.getPath.getName.head))
+        .flatMap { st =>
+          if (st.isDirectory) walk(st.getPath, segs :+ st.getPath.getName)
+          else if (st.getPath.getName.endsWith(".parquet")) Iterator(segs -> st)
+          else Iterator.empty
+        }
+    if (fs.exists(root)) walk(root, Nil) else Iterator.empty
+  }
+
+  /** THE footer reader: per data file under `dir` (see [[dataFiles]]) its
+    * directory segments, exact row count, and the max of integral `column`
+    * from footer statistics — None when a row group lacks them, Long.MinValue
+    * for a file without values. Zero Spark jobs, zero data reads; an
+    * unreadable footer throws rather than counting as empty.
+    */
+  private def footers(spark: SparkSession, dir: String,
+      column: String = ""): Seq[(List[String], Long, Option[Long])] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(spark, dir).map { case (segs, st) =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try {
+        val stats = reader.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == column))
+          .map(_.getStatistics)
+        val mx =
+          if (stats.exists(s => s == null || !s.hasNonNullValue)) None
+          else Some(stats.map(_.genericGetMax.asInstanceOf[Number].longValue)
+            .foldLeft(Long.MinValue)(math.max))
+        (segs, reader.getRecordCount, mx)
+      } finally reader.close()
+    }.toSeq
+  }
+
+  /** Distinct `batch=` partition values anywhere under `dir`. */
+  private def batchIds(spark: SparkSession, dir: String): Set[Long] =
+    dataFiles(spark, dir).flatMap(_._1.find(_.startsWith("batch=")))
+      .map(_.stripPrefix("batch=").toLong).toSet
 
   /** Apply one enriched curation micro-batch. `enriched` must carry
     * (doc_id long, source string, norm_key string, n_words long) plus one
@@ -424,8 +472,7 @@ object Incremental {
     // that itself crashed (marker up) is healed the same way: re-running
     // the fold converges, after which the append proceeds.
     if (deltaFoldMaxLive > 0 && (reshardMarkerFile(deltaDir).exists() ||
-        distinctBatchDirs(new java.io.File(deltaDir))
-          .count(_.stripPrefix("batch=").toLong < batchId) > deltaFoldMaxLive))
+        batchIds(spark, deltaDir).count(_ < batchId) > deltaFoldMaxLive))
       compactDeltas(spark, deltaDir, batchId - 1)
     // with the cadence disabled, a crashed fold still fails fast like
     // pinLayout does for the sharded surfaces: appending into the
@@ -445,44 +492,25 @@ object Incremental {
         stages.map(st => col(st).cast("long")): _*)
       .withColumn("shard", pmod(xxhash64(col("norm_key")), lit(nShards)).cast("long"))
       .persist()
-    val touched = b.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // bounded by nShards
-    if (touched.isEmpty) { b.unpersist(blocking = false); return }
-    val existingAll = parquetIfAny(spark, stateDir)
-      .getOrElse(spark.emptyDataFrame.select(Seq(lit("").as("norm_key"),
-        lit(0L).as("doc_id"), lit("").as("source"), lit(0L).as("n_words")) ++
-        stages.map(st => lit(0L).as(st)) ++
-        Seq(lit(-1L).as("bmax"), lit(0L).as("shard")): _*).limit(0))
-    // which touched shards already applied this batch (at-least-once retry
-    // guard): per-shard max(bmax) from footer stats — flat in state SIZE —
-    // with a touched-shard-pruned scan as the stats-missing fallback
-    val bmaxByShard = shardFooterMax(spark, stateDir, "shard", "bmax").getOrElse {
-      existingAll.filter(col("shard").isin(touched: _*))
-        .groupBy("shard").agg(max("bmax").as("bm"))
-        .collect().map(r => r.getAs[Number](0).longValue ->
-          r.getAs[Number](1).longValue).toMap
-    }
-    val fresh = touched.filterNot(s => bmaxByShard.get(s).exists(_ >= batchId))
-    // only fresh shards are ever read back: prune the state scan to them
-    val ex = existingAll
-      .filter(col("shard").isin(fresh: _*)) // partition-pruned
-      .persist()
-    if (fresh.nonEmpty) {
-      val keep = Seq("norm_key", "shard", "doc_id", "source", "n_words") ++ stages
-      val bf = b.filter(col("shard").isin(fresh: _*))
-      val exf = ex.select(keep.head, keep.tail: _*)
+    val keep = Seq("norm_key", "shard", "doc_id", "source", "n_words") ++ stages
+    val empty = spark.emptyDataFrame.select(Seq(lit("").as("norm_key"),
+      lit(0L).as("doc_id"), lit("").as("source"), lit(0L).as("n_words")) ++
+      stages.map(st => lit(0L).as(st)) ++
+      Seq(lit(-1L).as("bmax"), lit(0L).as("shard")): _*).limit(0)
+    shardMerge(spark, stateDir, "shard", batchId, b.select(keep.map(col): _*),
+        empty) { (old, bf) =>
+      val exf = old.select(keep.map(col): _*).persist()
       // new survivor per key: min doc_id over old state ∪ batch, one agg;
       // the survivor's stage flags ride inside the min-struct so a
       // superseding doc brings ITS verdicts
       val survStruct = struct(Seq(col("doc_id"), col("source"),
         col("n_words")) ++ stages.map(col): _*)
-      val merged = exf.unionByName(bf.select(keep.head, keep.tail: _*))
+      val merged = exf.unionByName(bf)
         .groupBy("norm_key", "shard")
         .agg(min(survStruct).as("s"))
         .select(Seq(col("norm_key"), col("s.doc_id").as("doc_id"),
           col("s.source").as("source"), col("s.n_words").as("n_words")) ++
-          stages.map(st => col(s"s.$st").as(st)) ++
-          Seq(lit(batchId).as("bmax"), col("shard")): _*)
+          stages.map(st => col(s"s.$st").as(st)) :+ col("shard"): _*)
         .persist()
       // funnel-counter delta = contrib(new survivors) − contrib(old
       // survivors) + docs_in from the raw batch; unchanged keys cancel.
@@ -509,21 +537,15 @@ object Incremental {
         .agg(sum(deltaCols.head).as(deltaCols.head),
           deltaCols.tail.map(c => sum(c).as(c)): _*)
         .withColumn("batch", lit(batchId))
-      // delta BEFORE state: the state's bmax is the commit marker, so a
-      // crash-retry recomputes a bit-identical delta against unchanged
-      // state and the (batch, shard) partition overwrite replaces it.
-      // Write layout: the delta is sources × shards rows → one file; the
-      // key index repartitions BY SHARD so each rewritten shard dir gets
-      // one file instead of one per upstream task (32 tasks × 16 shards
-      // of tiny files dominated the wall at bench scale, and a shard's
-      // readers want few large files at any scale).
+      // the funnel delta lands BEFORE the key index's write thunk runs.
+      // Write layout: the delta is sources × shards rows → one file (the
+      // kernel gives each rewritten key-index shard one file: 32 tasks ×
+      // 16 shards of tiny files dominated the wall at bench scale).
       delta.coalesce(1).write.mode("overwrite").partitionBy("batch", "shard")
         .parquet(deltaDir)
-      merged.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(stateDir)
-      merged.unpersist(blocking = false)
-    }
-    ex.unpersist(blocking = false)
+      exf.unpersist(blocking = false)
+      merged
+    }.foreach(_())
     b.unpersist(blocking = false)
   } }
 
@@ -615,7 +637,7 @@ object Incremental {
     // every batch < batchId is checkpoint-committed by the streaming
     // contract, so folding ≤ batchId-1 here is always legal; the fold is
     // crash-self-repairing and runs under this maintainer's own lease
-    if (shouldAutoCompact(s"$stateDir/idx", s"$stateDir/idx_base",
+    if (shouldAutoCompact(spark, s"$stateDir/idx", s"$stateDir/idx_base",
         autoCompactMinLive))
       compactNearDup(spark, stateDir, batchId - 1)
     val k = bands * rowsPerBand
@@ -632,8 +654,7 @@ object Incremental {
         col("col").as("bucket"))
       .withColumn("bp", pmod(col("bucket"), lit(nBp)).cast("long"))
       .persist()
-    val bps = newIdx.select("bp").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // bounded by nBp
+    val bps = longs(newIdx.select("bp").distinct()) // bounded by nBp
     def existingOr(path: String, empty: => DataFrame): DataFrame =
       parquetIfAny(spark, path).getOrElse(empty)
     // DEAD buckets — the maintained twin of the batch path's maxBucket
@@ -840,19 +861,12 @@ object Incremental {
     f.delete()
   }
 
-  /** True when `f` (file or dir) holds at least one parquet data file — an
-    * empty dynamic-overwrite write leaves a dir with no partitions, which
-    * breaks schema inference on a bare read.
+  /** The surface at `path`, when it holds at least one parquet data file —
+    * an empty dynamic-overwrite write leaves a dir with no partitions,
+    * which breaks schema inference on a bare read.
     */
-  private def hasParquet(f: java.io.File): Boolean =
-    (f.isFile && f.getName.endsWith(".parquet")) ||
-      (f.isDirectory &&
-        Option(f.listFiles()).exists(_.exists(hasParquet)))
-
-  private[graft] def parquetIfAny(spark: SparkSession, path: String): Option[DataFrame] = {
-    val f = new java.io.File(path)
-    if (f.exists() && hasParquet(f)) Some(spark.read.parquet(path)) else None
-  }
+  private[graft] def parquetIfAny(spark: SparkSession, path: String): Option[DataFrame] =
+    if (dataFiles(spark, path).hasNext) Some(spark.read.parquet(path)) else None
 
   /** Promote `_<name>.tmp` over `<name>` under `parent` with the
     * retire-rename discipline (the foldBatches crash contract): a stale
@@ -892,47 +906,23 @@ object Incremental {
     require(tmp.renameTo(dir), s"failed to promote $tmp")
   }
 
-  /** Re-shard one hash-sharded MV surface in place: recompute `shardCol`
-    * as `shardOf`, pin every row's bmax (when present) to the table's
-    * global max — at the quiescent point where resharding is legal, every
-    * committed batch is applied everywhere, so the per-shard replay guard
-    * stays exact after rows migrate between shards — and swap via
-    * [[swapInPlace]]. Reads the primary or its retiree, so a crashed
-    * reshard re-runs to convergence (recomputing a shard column is
-    * idempotent). No-op when the surface holds no data yet.
+  /** Carry the `_`-prefixed marker files (_layout, _highwater, the lease)
+    * of `parent/name` into its replacement `_<name>.tmp` before a swap, or
+    * the promote would drop the pins. Retiree first, then primary
+    * (REPLACE_EXISTING): after a mid-swap crash the pins live only in
+    * `_<name>.old`, while the lease's mkdirs has recreated an EMPTY primary
+    * that must not shadow them; when both hold a file the primary (current)
+    * copy wins.
     */
-  private def reshardDir(spark: SparkSession, parent: String, name: String,
-      shardCol: String, shardOf: Column, partCols: Seq[String]): Boolean = {
-    val cur = parquetIfAny(spark, s"$parent/$name")
-      .orElse(parquetIfAny(spark, s"$parent/_$name.old"))
-      .getOrElse(return false)
-    val re0 = cur.withColumn(shardCol, shardOf.cast("long"))
-    val re = if (cur.columns.contains("bmax")) {
-      val mx = cur.agg(max("bmax")).collect()(0).getAs[Number](0).longValue
-      re0.withColumn("bmax", lit(mx))
-    } else re0
-    re.repartition(col(shardCol))
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$parent/_$name.tmp")
-    // flat-table families keep their marker files (_layout, _highwater, …)
-    // in the data dir itself — carry them into the replacement before the
-    // swap or the promote would drop the pins. Merge retiree-first, then
-    // primary (REPLACE_EXISTING): after a mid-swap crash the pins live
-    // only in _<name>.old, while the lease's mkdirs has recreated an
-    // EMPTY primary that must not shadow them; when both hold a file the
-    // primary (current) copy wins.
-    val prim = new java.io.File(parent, name)
-    val oldD = new java.io.File(parent, s"_$name.old")
+  private def carryMarkers(parent: String, name: String): Unit =
     for {
-      srcDir <- Seq(oldD, prim)
+      srcDir <- Seq(new java.io.File(parent, s"_$name.old"),
+        new java.io.File(parent, name))
       f <- Option(srcDir.listFiles()).getOrElse(Array.empty[java.io.File])
       if f.isFile && f.getName.startsWith("_") && f.getName != "_SUCCESS"
     } java.nio.file.Files.copy(f.toPath,
       new java.io.File(s"$parent/_$name.tmp", f.getName).toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    swapInPlace(parent, name)
-    true
-  }
 
   /** Run a reshard/re-bucket body under the `_reshard_pending` marker:
     * written before the first swap, cleared only after the layout pin is
@@ -992,67 +982,12 @@ object Incremental {
     * state dir itself for flat families; the family root for families
     * whose reshard swaps a child dir).
     */
-  private[graft] def servingPath(markerDir: String, dir: String): String = {
+  private[graft] def servingPath(spark: SparkSession, markerDir: String,
+      dir: String): String = {
     if (!reshardMarkerFile(markerDir).exists()) return dir
     val d = new java.io.File(dir).getAbsoluteFile
     val old = new java.io.File(d.getParentFile, s"_${d.getName}.old")
-    if (old.exists() && hasParquet(old)) old.getPath else dir
-  }
-
-  /** Footer-stats max of a required integral column across every parquet
-    * file under `dir` (recursive — folded base surfaces nest under
-    * hash-prefix dirs). Metadata-only; `None` when any file lacks stats
-    * for the column or no file holds rows.
-    */
-  private def footerMaxLong(spark: SparkSession, dir: String,
-      column: String): Option[Long] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isFile) { if (f.getName.endsWith(".parquet")) Seq(f) else Nil }
-      else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .toSeq.flatMap(files)
-    var mx = Option.empty[Long]
-    for (f <- files(new java.io.File(dir))) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getPath), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val maxes =
-        try reader.getFooter.getBlocks.asScala.flatMap { blk =>
-          blk.getColumns.asScala
-            .filter(_.getPath.toDotString == column)
-            .map(_.getStatistics)
-            .map(st => if (st == null || !st.hasNonNullValue) None
-              else st.genericGetMax match {
-                case n: java.lang.Number => Some(n.longValue)
-                case _ => None
-              })
-        } finally reader.close()
-      if (maxes.exists(_.isEmpty)) return None // stats missing: caller falls back
-      maxes.flatten.reduceOption(math.max(_: Long, _: Long)).foreach { m =>
-        mx = Some(mx.fold(m)(math.max(m, _)))
-      }
-    }
-    mx
-  }
-
-  /** Exact row count from parquet FOOTERS across every data file under
-    * `dir` (recursive) — zero Spark jobs, zero data reads (round-15: the
-    * CC fold cadence ran a count() JOB per batch for a number the footers
-    * already hold; parquet block row counts are exact by format contract).
-    */
-  private def footerRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isFile) { if (f.getName.endsWith(".parquet")) Seq(f) else Nil }
-      else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .toSeq.flatMap(files)
-    files(new java.io.File(dir)).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getPath), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    if (parquetIfAny(spark, old.getPath).isDefined) old.getPath else dir
   }
 
   /** Update one `k=v` entry in a state dir's `_layout` pin (used by the
@@ -1095,14 +1030,51 @@ object Incremental {
   // ∝ corpus/batch ratio; at 100 TB these layouts live in a table format
   // whose file-level stats prune at key granularity, same plan shape.
 
+  /** Re-shard a family's hash-sharded surfaces in place, under the lease
+    * and the `_reshard_pending` marker, then re-pin `layoutKey` to `n`
+    * (a no-op for n ≤ 0). Each surface is (sub-dir — "" for a flat family,
+    * whose state dir IS the surface —, hash key, partition columns with
+    * the shard column first). Per surface: recompute the shard column, pin
+    * every row's bmax to the surface's global max — at the quiescent point
+    * where resharding is legal every committed batch is applied
+    * everywhere, so the per-shard replay guard stays exact after rows
+    * migrate between shards — and swap via [[swapInPlace]]. Reads the
+    * primary or its retiree, so a crashed reshard re-runs to convergence
+    * (recomputing a shard column is idempotent). Surfaces holding no data
+    * yet are skipped; `surfaces` is evaluated under the marker.
+    */
+  private def reshard(spark: SparkSession, stateDir: String, layoutKey: String,
+      n: Int, surfaces: => Seq[(String, Column, Seq[String])]): Unit =
+    if (n > 0) withLease(stateDir) { withReshardMarker(stateDir) {
+      val moved = surfaces.map { case (sub, key, partCols) =>
+        val d = new java.io.File(stateDir).getAbsoluteFile
+        val (parent, name) =
+          if (sub.isEmpty) (d.getParent, d.getName) else (d.getPath, sub)
+        parquetIfAny(spark, s"$parent/$name")
+          .orElse(parquetIfAny(spark, s"$parent/_$name.old")).exists { cur =>
+            val re = cur.withColumn(partCols.head, pmod(key, lit(n)).cast("long"))
+            (if (!cur.columns.contains("bmax")) re
+             else re.withColumn("bmax", lit(cur.agg(max("bmax")).collect()(0)
+               .getAs[Number](0).longValue)))
+              .repartition(col(partCols.head))
+              .write.mode("overwrite").partitionBy(partCols: _*)
+              .parquet(s"$parent/_$name.tmp")
+            carryMarkers(parent, name)
+            swapInPlace(parent, name)
+            true
+          }
+      }
+      if (moved.contains(true)) updateLayout(stateDir, layoutKey, n)
+    } }
+
+  /** The join key a CDC or join family pinned in its `_layout`. */
+  private def layoutKeyCol(stateDir: String): Column =
+    col("key=([^,]+)".r.findFirstMatchIn(readLayout(stateDir)).get.group(1))
+
   /** Grow the generic agg MV's shard count ([[applyBatch]] layout). */
   def reshardAgg(spark: SparkSession, stateDir: String, newNShards: Int): Unit =
-    withLease(stateDir) { withReshardMarker(stateDir) {
-      if (reshardDir(spark, new java.io.File(stateDir).getParent,
-        new java.io.File(stateDir).getName, "shard",
-        pmod(col("user_id"), lit(newNShards)), Seq("shard")))
-        updateLayout(stateDir, "nShards", newNShards)
-    } }
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq(("", col("user_id"), Seq("shard"))))
 
   /** Grow the curation key index's shard count ([[applyCurationBatch]]).
     * The delta stream keeps its historical shard values (its shard column
@@ -1110,95 +1082,57 @@ object Incremental {
     * pass the new nShards — the layout pin enforces it.
     */
   def reshardCuration(spark: SparkSession, stateDir: String,
-      newNShards: Int): Unit = withLease(stateDir) { withReshardMarker(stateDir) {
-    if (reshardDir(spark, new java.io.File(stateDir).getParent,
-      new java.io.File(stateDir).getName, "shard",
-      pmod(xxhash64(col("norm_key")), lit(newNShards)), Seq("shard")))
-      updateLayout(stateDir, "nShards", newNShards)
-  } }
+      newNShards: Int): Unit =
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq(("", xxhash64(col("norm_key")), Seq("shard"))))
 
   /** Grow the CDC target table's shard count ([[applyCdcBatch]]). */
   def reshardCdc(spark: SparkSession, stateDir: String, newNShards: Int): Unit =
-    withLease(stateDir) { withReshardMarker(stateDir) {
-      val keyCol = "key=([^,]+)".r.findFirstMatchIn(readLayout(stateDir))
-        .get.group(1)
-      if (reshardDir(spark, new java.io.File(stateDir).getParent,
-        new java.io.File(stateDir).getName, "shard",
-        pmod(col(keyCol), lit(newNShards)), Seq("shard")))
-        updateLayout(stateDir, "nShards", newNShards)
-    } }
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq(("", layoutKeyCol(stateDir), Seq("shard"))))
 
   /** Grow the session MV's shard count ([[applySessionBatch]]). */
   def reshardSessions(spark: SparkSession, stateDir: String,
-      newNShards: Int): Unit = withLease(stateDir) { withReshardMarker(stateDir) {
-    if (reshardDir(spark, new java.io.File(stateDir).getParent,
-      new java.io.File(stateDir).getName, "shard",
-      pmod(col("user_id"), lit(newNShards)), Seq("shard")))
-      updateLayout(stateDir, "nShards", newNShards)
-  } }
+      newNShards: Int): Unit =
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq(("", col("user_id"), Seq("shard"))))
 
   /** Grow the join MV's shard count across all three surfaces
     * ([[applyJoinBatch]]'s l/, o/, mv/).
     */
   def reshardJoin(spark: SparkSession, stateDir: String,
-      newNShards: Int): Unit = withLease(stateDir) { withReshardMarker(stateDir) {
-    val keyCol = "key=([^,]+)".r.findFirstMatchIn(readLayout(stateDir))
-      .get.group(1)
-    val any = Seq("l", "o", "mv").map(s =>
-      reshardDir(spark, stateDir, s, "shard",
-        pmod(col(keyCol), lit(newNShards)), Seq("shard")))
-    if (any.exists(identity)) updateLayout(stateDir, "nShards", newNShards)
-  } }
+      newNShards: Int): Unit =
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq("l", "o", "mv").map(s => (s, layoutKeyCol(stateDir), Seq("shard"))))
 
   /** Grow the CC label table's shard count ([[applyCcBatch]]'s lbl/). */
   def reshardCc(spark: SparkSession, stateDir: String, newNShards: Int): Unit =
-    withLease(stateDir) { withReshardMarker(stateDir) {
-      if (reshardDir(spark, stateDir, "lbl", "shard",
-        pmod(col("v"), lit(newNShards)), Seq("shard")))
-        updateLayout(stateDir, "nShards", newNShards)
-    } }
+    reshard(spark, stateDir, "nShards", newNShards,
+      Seq(("lbl", col("v"), Seq("shard"))))
 
   /** Grow the span screen's gram and/or doc shard counts
     * ([[applySpanBatch]]'s gc/ and cov/); pass -1 to leave one unchanged.
     */
   def reshardSpans(spark: SparkSession, stateDir: String,
-      newNGramShards: Int = -1, newNDocShards: Int = -1): Unit =
-    withLease(stateDir) { withReshardMarker(stateDir) {
-      if (newNGramShards > 0) {
-        if (reshardDir(spark, stateDir, "gc", "gshard",
-          pmod(col("gh"), lit(newNGramShards)), Seq("gshard")))
-          updateLayout(stateDir, "nGramShards", newNGramShards)
-      }
-      if (newNDocShards > 0) {
-        if (reshardDir(spark, stateDir, "cov", "dshard",
-          pmod(col("doc_id"), lit(newNDocShards)), Seq("dshard")))
-          updateLayout(stateDir, "nDocShards", newNDocShards)
-      }
-    } }
+      newNGramShards: Int = -1, newNDocShards: Int = -1): Unit = {
+    reshard(spark, stateDir, "nGramShards", newNGramShards,
+      Seq(("gc", col("gh"), Seq("gshard"))))
+    reshard(spark, stateDir, "nDocShards", newNDocShards,
+      Seq(("cov", col("doc_id"), Seq("dshard"))))
+  }
 
   /** Grow the decontamination screen's gram and/or doc shard counts
     * ([[applyContamBatch]]'s tg/ + tg_base/ + bg/ and ver/).
     */
   def reshardContam(spark: SparkSession, stateDir: String,
-      newNGramShards: Int = -1, newNDocShards: Int = -1): Unit =
-    withLease(stateDir) { withReshardMarker(stateDir) {
-      if (newNGramShards > 0) {
-        val any = Seq(
-          reshardDir(spark, stateDir, "tg", "gshard",
-            pmod(col("gh"), lit(newNGramShards)), Seq("gshard", "batch")),
-          reshardDir(spark, stateDir, "tg_base", "gshard",
-            pmod(col("gh"), lit(newNGramShards)), Seq("gshard")),
-          reshardDir(spark, stateDir, "bg", "gshard",
-            pmod(col("gh"), lit(newNGramShards)), Seq("gshard")))
-        if (any.exists(identity))
-          updateLayout(stateDir, "nGramShards", newNGramShards)
-      }
-      if (newNDocShards > 0) {
-        if (reshardDir(spark, stateDir, "ver", "dshard",
-          pmod(col("doc_id"), lit(newNDocShards)), Seq("dshard")))
-          updateLayout(stateDir, "nDocShards", newNDocShards)
-      }
-    } }
+      newNGramShards: Int = -1, newNDocShards: Int = -1): Unit = {
+    reshard(spark, stateDir, "nGramShards", newNGramShards, Seq(
+      ("tg", col("gh"), Seq("gshard", "batch")),
+      ("tg_base", col("gh"), Seq("gshard")),
+      ("bg", col("gh"), Seq("gshard"))))
+    reshard(spark, stateDir, "nDocShards", newNDocShards,
+      Seq(("ver", col("doc_id"), Seq("dshard"))))
+  }
 
   /** Fold one state surface's per-batch partitions ≤ `upToBatch` into base
     * storage (write-then-swap-then-delete; see the compaction contract
@@ -1208,8 +1142,9 @@ object Incremental {
     * bit-identical row streams.
     */
   private def foldBatches(spark: SparkSession, stateDir: String,
-      live: String, base: String, upToBatch: Long,
-      finish: DataFrame => DataFrame, partCols: Seq[String]): Unit = {
+      live: String, upToBatch: Long, finish: DataFrame => DataFrame,
+      partCols: Seq[String]): Unit = {
+    val base = s"${live}_base"
     val liveDir = s"$stateDir/$live"; val baseDir = s"$stateDir/$base"
     val tmpDir = s"$stateDir/_$base.tmp"
     // retired-base dir from a prior fold's crash window (underscore-
@@ -1249,16 +1184,10 @@ object Incremental {
       require(new java.io.File(tmpDir).renameTo(baseF),
         s"failed to promote $tmpDir to $baseDir")
       deleteRec(oldF)
-      val liveF = new java.io.File(liveDir)
-      val batchDirs = Option(liveF.listFiles()).getOrElse(Array.empty)
-        .flatMap { d =>
-          if (d.getName.startsWith("batch=")) Array(d)
-          else Option(d.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith("batch="))
-        }
-      batchDirs
-        .filter(_.getName.stripPrefix("batch=").toLong <= upToBatch)
-        .foreach(deleteRec)
+      dataFiles(spark, liveDir).map(_._1.span(!_.startsWith("batch=")))
+        .collect { case (pre, b :: _)
+          if b.stripPrefix("batch=").toLong <= upToBatch => (pre :+ b).mkString("/") }
+        .toSet.foreach((d: String) => deleteRec(new java.io.File(liveDir, d)))
     }
   }
 
@@ -1287,35 +1216,36 @@ object Incremental {
 
   private val autoCompactMaxLive = 64
 
-  /** Distinct `batch=` partition-dir names anywhere under `f` (one level of
-    * hash-prefix nesting or flat). Metadata-only.
-    */
-  private def distinctBatchDirs(f: java.io.File): Set[String] =
-    if (!f.isDirectory) Set.empty
-    else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .flatMap { d =>
-        if (d.isDirectory && d.getName.startsWith("batch=")) Set(d.getName)
-        else distinctBatchDirs(d)
-      }.toSet
-
-  private def parquetBytes(f: java.io.File): Long =
-    if (f.isFile) (if (f.getName.endsWith(".parquet")) f.length() else 0L)
-    else if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .map(parquetBytes).sum
-    else 0L
-
-  private[graft] def shouldAutoCompact(liveDir: String, baseDir: String,
-      minLive: Int): Boolean = {
+  private[graft] def shouldAutoCompact(spark: SparkSession, liveDir: String,
+      baseDir: String, minLive: Int): Boolean = {
     if (minLive <= 0) return false // explicit opt-out (probes of the
     // uncompacted regime; operators with their own cadence)
-    val live = new java.io.File(liveDir)
-    val nLive = distinctBatchDirs(live).size
+    def bytes(dir: String) = dataFiles(spark, dir).map(_._2.getLen).sum
+    val nLive = batchIds(spark, liveDir).size
     if (nLive < minLive) false
     else if (nLive > autoCompactMaxLive) true
-    else parquetBytes(live) >
-      math.max(1L, parquetBytes(new java.io.File(baseDir)))
+    else bytes(liveDir) > math.max(1L, bytes(baseDir))
   }
+
+  /** Fold every listed per-batch surface (live dir, finish, partition
+    * columns) of `stateDir` into its `_base` twin, then write the
+    * `_highwater` marker LAST: a crash before it re-runs the folds
+    * (self-repairing), and a late replay of a folded batch is a no-op.
+    */
+  private def foldAll(spark: SparkSession, stateDir: String, upToBatch: Long,
+      what: String, surfaces: Seq[(String, DataFrame => DataFrame, Seq[String])]): Unit = {
+    require(new java.io.File(s"$stateDir/${surfaces.head._1}").exists(),
+      s"no $what state under $stateDir")
+    for ((live, finish, partCols) <- surfaces)
+      foldBatches(spark, stateDir, live, upToBatch, finish, partCols)
+    java.nio.file.Files.writeString(
+      new java.io.File(stateDir, "_highwater").toPath, upToBatch.toString)
+  }
+
+  /** The screens' flat per-batch audit surfaces, folded after their index. */
+  private val screenFolds: Seq[(String, DataFrame => DataFrame, Seq[String])] =
+    Seq(("pairs", _.coalesce(4), Nil), ("decisions", _.coalesce(4), Nil),
+      ("dead", _.coalesce(1), Nil))
 
   /** Fold the near-dup screen's per-batch partitions ≤ `upToBatch` into
     * base storage: idx_base/ (bp-partitioned postings, original batch ids
@@ -1335,8 +1265,6 @@ object Incremental {
 
   private def compactNearDupBody(spark: SparkSession, stateDir: String,
       upToBatch: Long, newNBp: Int): Unit = {
-    require(new java.io.File(s"$stateDir/idx").exists(),
-      s"no near-dup state under $stateDir")
     // RE-BUCKETING (newNBp > 0): the sanctioned path to grow the pruning
     // granularity as the corpus grows (the _layout pin rejects a mid-stream
     // nBp change precisely because it must happen HERE, atomically with a
@@ -1347,19 +1275,11 @@ object Incremental {
     // collapses fold overlap); do not resume ingestion between a crashed
     // rebucket and its re-run.
     if (newNBp > 0) {
-      val liveBatches = Option(new java.io.File(s"$stateDir/idx").listFiles())
-        .getOrElse(Array.empty)
-        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-        .filter(_.getName.startsWith("batch="))
-        .map(_.getName.stripPrefix("batch=").toLong)
-      require(liveBatches.forall(_ <= upToBatch),
+      val above = batchIds(spark, s"$stateDir/idx").filter(_ > upToBatch)
+      require(above.isEmpty,
         s"re-bucketing requires folding ALL live batches: found batches " +
-          s"${liveBatches.filter(_ > upToBatch).distinct.sorted.mkString(",")} " +
-          s"above upToBatch=$upToBatch")
+          s"${above.toSeq.sorted.mkString(",")} above upToBatch=$upToBatch")
     }
-    def foldOne(live: String, base: String, finish: DataFrame => DataFrame,
-        partCols: Seq[String]): Unit =
-      foldBatches(spark, stateDir, live, base, upToBatch, finish, partCols)
     // postings: keep the bp partitioning (the per-batch pruned read needs
     // it) but collapse each prefix's many per-batch files into one;
     // re-bucketing recomputes bp from the stored bucket
@@ -1367,23 +1287,10 @@ object Incremental {
       if (newNBp > 0)
         _.withColumn("bp", pmod(col("bucket"), lit(newNBp)).cast("long"))
       else identity
-    foldOne("idx", "idx_base",
-      df => reBp(df).repartition(col("bp")).select("band", "bucket",
-        "doc_id", "sig", "batch", "bp"),
-      Seq("bp"))
-    foldOne("pairs", "pairs_base", _.coalesce(4), Nil)
-    foldOne("decisions", "decisions_base", _.coalesce(4), Nil)
-    foldOne("dead", "dead_base", _.coalesce(1), Nil)
-    if (newNBp > 0) {
-      val lf = new java.io.File(stateDir, "_layout")
-      if (lf.exists()) {
-        val stored = new String(java.nio.file.Files.readAllBytes(lf.toPath)).trim
-        java.nio.file.Files.writeString(lf.toPath,
-          stored.replaceAll("nBp=\\d+", s"nBp=$newNBp"))
-      }
-    }
-    java.nio.file.Files.writeString(
-      new java.io.File(stateDir, "_highwater").toPath, upToBatch.toString)
+    foldAll(spark, stateDir, upToBatch, "near-dup", ("idx",
+      (df: DataFrame) => reBp(df).repartition(col("bp")).select("band", "bucket",
+        "doc_id", "sig", "batch", "bp"), Seq("bp")) +: screenFolds)
+    if (newNBp > 0) updateLayout(stateDir, "nBp", newNBp)
   }
 
   /** Fold the embedding near-dup screen's per-batch partitions ≤
@@ -1394,20 +1301,10 @@ object Incremental {
     */
   def compactEmbDup(spark: SparkSession, stateDir: String,
       upToBatch: Long): Unit = withLease(stateDir) {
-    require(new java.io.File(s"$stateDir/idx").exists(),
-      s"no embedding near-dup state under $stateDir")
-    foldBatches(spark, stateDir, "idx", "idx_base", upToBatch,
-      df => df.repartition(col("bucket"))
-        .select("doc_id", "qv", "n2", "batch", "bucket"),
-      Seq("bucket"))
-    foldBatches(spark, stateDir, "pairs", "pairs_base", upToBatch,
-      _.coalesce(4), Nil)
-    foldBatches(spark, stateDir, "decisions", "decisions_base", upToBatch,
-      _.coalesce(4), Nil)
-    foldBatches(spark, stateDir, "dead", "dead_base", upToBatch,
-      _.coalesce(1), Nil)
-    java.nio.file.Files.writeString(
-      new java.io.File(stateDir, "_highwater").toPath, upToBatch.toString)
+    foldAll(spark, stateDir, upToBatch, "embedding near-dup", ("idx",
+      (df: DataFrame) => df.repartition(col("bucket"))
+        .select("doc_id", "qv", "n2", "batch", "bucket"), Seq("bucket")) +:
+      screenFolds)
   }
 
   /** Base + live union of one decision/pair surface, with a clear error
@@ -1427,9 +1324,10 @@ object Incremental {
     // partition pruning of the live batch= dirs on the other; a no-op in
     // the healthy regime (every live partition is above the fold's upTo).
     val baseMax = base.flatMap { b =>
-      footerMaxLong(spark, basePath, "batch").orElse(
-        Option(b.agg(max("batch")).collect()(0)).filterNot(_.isNullAt(0))
-          .map(_.getAs[Number](0).longValue))
+      val fs = footers(spark, basePath, "batch")
+      if (fs.forall(_._3.isDefined)) fs.map(_._3.get).maxOption
+      else Option(b.agg(max("batch")).collect()(0)).filterNot(_.isNullAt(0))
+        .map(_.getAs[Number](0).longValue)
     }
     val parts = (parquetIfAny(spark, s"$stateDir/$sub")
       .map(df => baseMax.fold(df)(m => df.filter(col("batch") > m))).toSeq ++
@@ -1451,14 +1349,9 @@ object Incremental {
     */
   def compactContam(spark: SparkSession, stateDir: String,
       upToBatch: Long): Unit = withLease(stateDir) {
-    require(new java.io.File(s"$stateDir/tg").exists(),
-      s"no decontamination state under $stateDir")
-    foldBatches(spark, stateDir, "tg", "tg_base", upToBatch,
-      df => df.repartition(col("gshard"))
-        .select("gh", "doc_id", "batch", "gshard"),
-      Seq("gshard"))
-    java.nio.file.Files.writeString(
-      new java.io.File(stateDir, "_highwater").toPath, upToBatch.toString)
+    foldAll(spark, stateDir, upToBatch, "decontamination", Seq(("tg",
+      (df: DataFrame) => df.repartition(col("gshard"))
+        .select("gh", "doc_id", "batch", "gshard"), Seq("gshard"))))
   }
 
   /** All near-dup decisions: compacted base + live per-batch partitions. */
@@ -1495,7 +1388,7 @@ object Incremental {
     val (parent, name) = (dirF.getParentFile.getPath, dirF.getName)
     // primary-or-retiree: after a crash between the swap's two renames the
     // data lives only in the retiree (the lease's mkdirs may have left an
-    // empty primary shell, which hasParquet excludes)
+    // empty primary shell, which parquetIfAny excludes)
     val cur = parquetIfAny(spark, deltaDir)
       .orElse(parquetIfAny(spark, s"$parent/_$name.old"))
     cur.foreach { d => withReshardMarker(deltaDir) {
@@ -1508,16 +1401,7 @@ object Incremental {
       folded.unionByName(d.filter(col("batch") > upToBatch))
         .coalesce(1).write.mode("overwrite").partitionBy("batch", "shard")
         .parquet(s"$parent/_$name.tmp")
-      // carry "_"-prefixed marker files (the lease; any future pins) into
-      // the replacement, retiree-first with the primary winning conflicts
-      // (same contract as reshardDir)
-      for {
-        srcDir <- Seq(new java.io.File(parent, s"_$name.old"), dirF)
-        f <- Option(srcDir.listFiles()).getOrElse(Array.empty[java.io.File])
-        if f.isFile && f.getName.startsWith("_") && f.getName != "_SUCCESS"
-      } java.nio.file.Files.copy(f.toPath,
-        new java.io.File(s"$parent/_$name.tmp", f.getName).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      carryMarkers(parent, name) // the lease; any future pins
       swapInPlace(parent, name)
     } }
   }
@@ -1581,11 +1465,8 @@ object Incremental {
   // into the touched cov shards. Cost is O(batch grams + touched shards);
   // nothing scans history.
   //
-  // Crash-retry ordering: cov is written BEFORE gc, and both carry
-  // per-shard bmax guards. All deltas derive from gc's OLD state, so a
-  // retry before gc committed recomputes them bit-identically (cov's union
-  // merge is idempotent and its applied shards are skipped by bmax); once
-  // gc committed, the whole batch had already committed (cov precedes it).
+  // Crash order (see the header): cov BEFORE gc. All deltas derive from
+  // gc's OLD state, and cov's union merge is idempotent besides.
   // Exactness: window hashes stand in for exact gram strings (64-bit
   // xxhash-fold; the batch scrubber's exact-string verify exists to kill
   // collisions, and the differential gate + a corpus audit confirm the
@@ -1626,109 +1507,72 @@ object Incremental {
         min(struct(col("doc_id"), col("pos").cast("long").as("pos"))).as("hm"))
       .withColumn("gshard", pmod(col("gh"), lit(nGramShards)).cast("long"))
       .persist()
-    val touchedG = gAgg.select("gshard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq
-    if (touchedG.isEmpty) {
-      gAgg.unpersist(blocking = false); b.unpersist(blocking = false); return
-    }
-    val gcBmax = shardFooterMax(spark, gcDir, "gshard", "bmax").getOrElse {
-      spark.read.parquet(gcDir).filter(col("gshard").isin(touchedG: _*))
-        .groupBy("gshard").agg(max("bmax").as("bm"))
-        .collect().map(r => r.getAs[Number](0).longValue ->
-          r.getAs[Number](1).longValue).toMap
-    }
-    val freshG = touchedG.filterNot(s => gcBmax.get(s).exists(_ >= batchId))
-    val gcOld = (
-      if (new java.io.File(gcDir).exists()) spark.read.parquet(gcDir)
-      else spark.emptyDataFrame.select(lit(0L).as("gh"), lit(0L).as("cnt"),
-        lit(-1L).as("h_doc"), lit(-1L).as("h_pos"), lit(-1L).as("bmax"),
-        lit(0L).as("gshard")).limit(0))
-      .filter(col("gshard").isin(freshG: _*)) // partition-pruned
-      .select(col("gh"), col("cnt").as("cnt_o"), col("h_doc").as("hdoc_o"),
-        col("h_pos").as("hpos_o"), col("gshard").as("gshard_o"))
-    // fold batch counts into old counts; rows only-in-old pass through
-    // (the shard partitions rewrite whole), rows only-in-batch insert
-    val joined = gcOld
-      .join(gAgg.filter(col("gshard").isin(freshG: _*)), Seq("gh"),
-        "full_outer")
-      .withColumn("cnt",
-        coalesce(col("cnt_o"), lit(0L)) + coalesce(col("cnt_b"), lit(0L)))
-      .persist()
-    val gcNew = joined.select(col("gh"), col("cnt"),
-      when(col("cnt") === 1, coalesce(col("hdoc_o"), col("hm.doc_id")))
-        .otherwise(lit(-1L)).as("h_doc"),
-      when(col("cnt") === 1, coalesce(col("hpos_o"), col("hm.pos")))
-        .otherwise(lit(-1L)).as("h_pos"),
-      lit(batchId).as("bmax"),
-      coalesce(col("gshard_o"), col("gshard")).as("gshard"))
-    // crossings: a gram that WAS a singleton just became duplicated — its
-    // one historical occurrence gets retro-covered (the retraction)
-    val retro = joined
-      .filter(col("cnt_o") === 1 && col("cnt_b") >= 1)
-      .groupBy(col("hdoc_o").as("doc_id"))
-      .agg(collect_list(col("hpos_o")).as("starts"))
-      .select(col("doc_id"), lit(null).cast("string").as("source"),
-        lit(null).cast("long").as("n_tok"), col("starts"))
-    // batch occurrences whose gram is duplicated NOW (by history, by the
-    // batch itself, or both) — a batch-gram-sized semi join, never O(state)
-    val dupGh = joined.filter(col("cnt_b") >= 1 && col("cnt") >= 2)
-      .select("gh")
-    val coveredStarts = occ.join(dupGh, Seq("gh"), "left_semi")
-      .groupBy("doc_id").agg(collect_list(col("pos").cast("long")).as("starts"))
     val emptyArr = array().cast("array<long>")
-    val base = b.select("doc_id", "source", "n_tok")
-      .join(coveredStarts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("n_tok"),
-        coalesce(col("starts"), emptyArr).as("starts"))
-    val covDelta = base.unionByName(retro)
-      .groupBy("doc_id")
-      .agg(max(col("source")).as("src_d"), max(col("n_tok")).as("nt_d"),
-        flatten(collect_list(col("starts"))).as("starts_d"))
-      .withColumn("dshard", pmod(col("doc_id"), lit(nDocShards)).cast("long"))
-      .persist()
-    val touchedD = covDelta.select("dshard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq
-    val covBmax = shardFooterMax(spark, covDir, "dshard", "bmax").getOrElse {
-      spark.read.parquet(covDir).filter(col("dshard").isin(touchedD: _*))
-        .groupBy("dshard").agg(max("bmax").as("bm"))
-        .collect().map(r => r.getAs[Number](0).longValue ->
-          r.getAs[Number](1).longValue).toMap
-    }
-    val freshD = touchedD.filterNot(s => covBmax.get(s).exists(_ >= batchId))
-    if (freshD.nonEmpty) {
-      val covOld = (
-        if (new java.io.File(covDir).exists()) spark.read.parquet(covDir)
-        else spark.emptyDataFrame.select(lit(0L).as("doc_id"),
-          lit("").as("source"), lit(0L).as("n_tok"), emptyArr.as("starts"),
-          lit(-1L).as("bmax"), lit(0L).as("dshard")).limit(0))
-        .filter(col("dshard").isin(freshD: _*)) // partition-pruned
-        .select(col("doc_id"), col("source").as("src_o"),
-          col("n_tok").as("nt_o"), col("starts").as("starts_o"),
-          col("dshard").as("dsh_o"))
-      // coverage merge = set UNION of window starts (idempotent); a doc's
-      // n_tok/source come from whichever side knows them (retro rows don't)
-      val mergedCov = covOld
-        .join(covDelta.filter(col("dshard").isin(freshD: _*)), Seq("doc_id"),
-          "full_outer")
-        .select(col("doc_id"),
-          coalesce(col("src_o"), col("src_d")).as("source"),
-          coalesce(col("nt_o"), col("nt_d")).as("n_tok"),
-          array_sort(array_distinct(concat(
-            coalesce(col("starts_o"), emptyArr),
-            coalesce(col("starts_d"), emptyArr)))).as("starts"),
-          lit(batchId).as("bmax"),
-          coalesce(col("dsh_o"), col("dshard")).as("dshard"))
-      // cov BEFORE gc: every delta above derives from gc's OLD state, so a
-      // crash-retry anywhere recomputes bit-identical content (gc's bmax is
-      // the batch's commit marker; cov's own bmax skips its applied shards)
-      mergedCov.repartition(col("dshard"))
-        .write.mode("overwrite").partitionBy("dshard").parquet(covDir)
-    }
-    if (freshG.nonEmpty)
-      gcNew.repartition(col("gshard"))
-        .write.mode("overwrite").partitionBy("gshard").parquet(gcDir)
-    joined.unpersist(blocking = false)
-    covDelta.unpersist(blocking = false)
+    val emptyGc = spark.emptyDataFrame.select(lit(0L).as("gh"), lit(0L).as("cnt"),
+      lit(-1L).as("h_doc"), lit(-1L).as("h_pos"), lit(-1L).as("bmax"),
+      lit(0L).as("gshard")).limit(0)
+    val emptyCov = spark.emptyDataFrame.select(lit(0L).as("doc_id"),
+      lit("").as("source"), lit(0L).as("n_tok"), emptyArr.as("starts"),
+      lit(-1L).as("bmax"), lit(0L).as("dshard")).limit(0)
+    // gc's merge derives the coverage deltas from gc's OLD state and
+    // commits cov before gc's own write (gc commits the batch)
+    shardMerge(spark, gcDir, "gshard", batchId, gAgg, emptyGc) { (gcOld, gFresh) =>
+      // fold batch counts into old counts; rows only-in-old pass through
+      // (the shard partitions rewrite whole), rows only-in-batch insert
+      val joined = gcOld.select(col("gh"), col("cnt").as("cnt_o"),
+          col("h_doc").as("hdoc_o"), col("h_pos").as("hpos_o"),
+          col("gshard").as("gshard_o"))
+        .join(gFresh, Seq("gh"), "full_outer")
+        .withColumn("cnt",
+          coalesce(col("cnt_o"), lit(0L)) + coalesce(col("cnt_b"), lit(0L)))
+        .withColumn("h_doc", when(col("cnt") === 1,
+          coalesce(col("hdoc_o"), col("hm.doc_id"))).otherwise(lit(-1L)))
+        .withColumn("h_pos", when(col("cnt") === 1,
+          coalesce(col("hpos_o"), col("hm.pos"))).otherwise(lit(-1L)))
+        .withColumn("gshard", coalesce(col("gshard_o"), col("gshard")))
+        .persist()
+      // crossings: a gram that WAS a singleton just became duplicated — its
+      // one historical occurrence gets retro-covered (the retraction)
+      val retro = joined
+        .filter(col("cnt_o") === 1 && col("cnt_b") >= 1)
+        .groupBy(col("hdoc_o").as("doc_id"))
+        .agg(collect_list(col("hpos_o")).as("starts"))
+        .select(col("doc_id"), lit(null).cast("string").as("source"),
+          lit(null).cast("long").as("n_tok"), col("starts"))
+      // batch occurrences whose gram is duplicated NOW (by history, by the
+      // batch itself, or both) — a batch-gram-sized semi join, never O(state)
+      val dupGh = joined.filter(col("cnt_b") >= 1 && col("cnt") >= 2)
+        .select("gh")
+      val coveredStarts = occ.join(dupGh, Seq("gh"), "left_semi")
+        .groupBy("doc_id").agg(collect_list(col("pos").cast("long")).as("starts"))
+      val base = b.select("doc_id", "source", "n_tok")
+        .join(coveredStarts, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("n_tok"),
+          coalesce(col("starts"), emptyArr).as("starts"))
+      val covDelta = base.unionByName(retro)
+        .groupBy("doc_id")
+        .agg(max(col("source")).as("src_d"), max(col("n_tok")).as("nt_d"),
+          flatten(collect_list(col("starts"))).as("starts_d"))
+        .withColumn("dshard", pmod(col("doc_id"), lit(nDocShards)).cast("long"))
+        .persist()
+      shardMerge(spark, covDir, "dshard", batchId, covDelta, emptyCov) { (covOld, d) =>
+        // coverage merge = set UNION of window starts (idempotent); a doc's
+        // n_tok/source come from whichever side knows them (retro rows don't)
+        covOld.select(col("doc_id"), col("source").as("src_o"),
+            col("n_tok").as("nt_o"), col("starts").as("starts_o"),
+            col("dshard").as("dsh_o"))
+          .join(d, Seq("doc_id"), "full_outer")
+          .select(col("doc_id"),
+            coalesce(col("src_o"), col("src_d")).as("source"),
+            coalesce(col("nt_o"), col("nt_d")).as("n_tok"),
+            array_sort(array_distinct(concat(
+              coalesce(col("starts_o"), emptyArr),
+              coalesce(col("starts_d"), emptyArr)))).as("starts"),
+            coalesce(col("dsh_o"), col("dshard")).as("dshard"))
+      }.foreach(_())
+      covDelta.unpersist(blocking = false)
+      joined
+    }.foreach(_())
     gAgg.unpersist(blocking = false)
     b.unpersist(blocking = false)
   }
@@ -1740,7 +1584,7 @@ object Incremental {
     */
   def spanVerdicts(spark: SparkSession, stateDir: String,
       n: Int = 15): DataFrame =
-    spark.read.parquet(servingPath(stateDir, s"$stateDir/cov"))
+    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/cov"))
       .withColumn("covered", expr(
         s"""aggregate(starts, named_struct('a', 0L, 'e', -1L),
            |  (s, x) -> named_struct(
@@ -1778,7 +1622,7 @@ object Incremental {
       sum("d_dedup").as("after_dedup")) ++
       stages.zip(outNames).map { case (st, o) => sum(s"d_$st").as(o) } :+
       sum("d_tokens").as("kept_tokens")
-    spark.read.parquet(servingPath(deltaDir, deltaDir))
+    spark.read.parquet(servingPath(spark, deltaDir, deltaDir))
       .groupBy("source").agg(aggs.head, aggs.tail: _*)
   }
 
@@ -1871,7 +1715,7 @@ object Incremental {
     val head = curationReport(spark, s"$stateDir/delta")
       .select("source", "docs_in", "after_dedup", "after_rules")
     val surv = spark.read
-      .parquet(servingPath(s"$stateDir/key", s"$stateDir/key"))
+      .parquet(servingPath(spark, s"$stateDir/key", s"$stateDir/key"))
       .select("doc_id", "source", "n_words", "ok_rules", "ok_clf")
     val sv = surv
       .join(spanVerdicts(spark, s"$stateDir/span", n)
@@ -1944,7 +1788,7 @@ object Incremental {
     pinLayout(stateDir,
       s"nBits=$nBits,thresholdPct=$thresholdPct,maxBucket=$maxBucket")
     // auto-compaction cadence (contract above [[compactNearDup]])
-    if (shouldAutoCompact(s"$stateDir/idx", s"$stateDir/idx_base",
+    if (shouldAutoCompact(spark, s"$stateDir/idx", s"$stateDir/idx_base",
         autoCompactMinLive))
       compactEmbDup(spark, stateDir, batchId - 1)
     // bucket = the sign bits of the first nBits quantized components
@@ -2153,9 +1997,8 @@ object Incremental {
   // materialized join rows), all pmod(key, nShards) with per-shard bmax
   // guards. Per batch: compute ΔJ with two shard-pruned joins against the
   // OLD sides (cost O(Δ × matches), never a re-join of history), then
-  // commit mv BEFORE l BEFORE o — every delta derives from the old l/o, so
-  // a crash-retry anywhere recomputes ΔJ bit-identically against unchanged
-  // inputs while already-committed surfaces skip via bmax. At 100 TB the
+  // commit mv BEFORE l BEFORE o — every delta derives from the old l/o
+  // (the header's crash order). At 100 TB the
   // same layout is two bucketed tables plus their co-partitioned join — a
   // batch touches its keys' shards and nothing else.
 
@@ -2178,8 +2021,7 @@ object Incremental {
       .select(Seq(col(keyCol), col("shard")) ++ lCols.map(col): _*)
     val dO = b.filter(col("side") === "o")
       .select(Seq(col(keyCol), col("shard")) ++ oCols.map(col): _*)
-    val touched = b.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // bounded by nShards
+    val touched = longs(b.select("shard").distinct()) // bounded by nShards
     if (touched.isEmpty) { b.unpersist(blocking = false); return }
     def sideOld(sub: String, cols: Seq[String]): DataFrame =
       parquetIfAny(spark, s"$stateDir/$sub")
@@ -2199,52 +2041,20 @@ object Incremental {
         (lCols ++ oCols).map(col): _*)
       .persist()
     dJ.count() // materialize before any state write
-    def commit(sub: String, cols: Seq[String], delta: DataFrame): Unit = {
-      val dir = s"$stateDir/$sub"
-      // per-SURFACE touched shards — the batch-global set would rewrite
-      // shards this surface's delta never touches (a one-fact batch would
-      // rewrite the whole MV), turning O(Δ × matches) into O(table)
-      val dTouched = delta.select("shard").distinct()
-        .collect().map(_.getAs[Number](0).longValue).toSeq
-      if (dTouched.isEmpty) return
-      val bmaxByShard = shardFooterMax(spark, dir, "shard", "bmax")
-        .getOrElse {
-          parquetIfAny(spark, dir)
-            .map(_.filter(col("shard").isin(dTouched: _*))
-              .groupBy("shard").agg(max("bmax").as("bm"))
-              .collect().map(r => r.getAs[Number](0).longValue ->
-                r.getAs[Number](1).longValue).toMap)
-            .getOrElse(Map.empty)
-        }
-      val fresh = dTouched.filterNot(s =>
-        bmaxByShard.get(s).exists(_ >= batchId))
-      // an empty fresh-shard delta adds nothing and needs no commit
-      // marker: a retry recomputes the same empty delta (shown above), and
-      // writing would only rewrite old rows — or create a schema-less dir
-      if (fresh.nonEmpty &&
-          !delta.filter(col("shard").isin(fresh: _*)).isEmpty) {
-        val keep = Seq(keyCol, "shard") ++ cols
-        val old = parquetIfAny(spark, dir)
-          .map(_.filter(col("shard").isin(fresh: _*))
-            .select(keep.head, keep.tail: _*))
-          .getOrElse(delta.select(keep.head, keep.tail: _*).limit(0))
-          .persist()
-        old.count() // materialize before overwriting its own shards
-        old.unionByName(delta.filter(col("shard").isin(fresh: _*))
-            .select(keep.head, keep.tail: _*))
-          .withColumn("bmax", lit(batchId))
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard").parquet(dir)
-        old.unpersist(blocking = false)
-      }
+    // mv BEFORE l BEFORE o, each merge pruned to the shards ITS delta
+    // touches — the batch-global set would rewrite shards this surface's
+    // delta never touches (a one-fact batch would rewrite the whole MV),
+    // turning O(Δ × matches) into O(table). (round-15: concurrent l/o
+    // commits were iso A/B'd — a wash here, the commits are collect-bound —
+    // and reverted.)
+    for ((sub, cols, delta) <- Seq(("mv", lCols ++ oCols, dJ), ("l", lCols, dL),
+        ("o", oCols, dO))) {
+      val keep = (Seq(keyCol, "shard") ++ cols).map(col)
+      val empty = delta.select(keep: _*).withColumn("bmax", lit(-1L)).limit(0)
+      shardMerge(spark, s"$stateDir/$sub", "shard", batchId, delta, empty)(
+        (old, d) => old.select(keep: _*).unionByName(d.select(keep: _*))
+      ).foreach(_())
     }
-    // mv BEFORE l BEFORE o: ΔJ derives from the OLD l/o, so a retry at any
-    // crash point recomputes it bit-identically (committed surfaces skip
-    // via their own bmax). (round-15: concurrent l/o commits were iso
-    // A/B'd — a wash here, the commits are collect-bound — and reverted.)
-    commit("mv", lCols ++ oCols, dJ)
-    commit("l", lCols, dL)
-    commit("o", oCols, dO)
     dJ.unpersist(blocking = false)
     lOld.unpersist(blocking = false)
     oOld.unpersist(blocking = false)
@@ -2253,7 +2063,7 @@ object Incremental {
 
   /** The materialized join rows: key + both sides' payloads. */
   def joinMv(spark: SparkSession, stateDir: String, keyCol: String): DataFrame = {
-    val df = spark.read.parquet(servingPath(stateDir, s"$stateDir/mv"))
+    val df = spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/mv"))
     df.select(keyCol, df.columns.toSeq
       .filterNot(Set(keyCol, "bmax", "shard")): _*)
   }
@@ -2288,8 +2098,8 @@ object Incremental {
   // touched user over the batch (an aggregate lambda — no window over
   // history), then an interval-set merge into the touched shards. Unlike
   // the coverage MV's pure set union, the n counts make the merge
-  // NON-idempotent by algebra — the per-shard bmax guard is what makes
-  // retries exact (same discipline as [[applyBatch]]'s counts).
+  // NON-idempotent by algebra — the kernel's bmax guard alone keeps
+  // retries exact.
 
   /** One user's sorted (s, e, n) intervals gap-merged: consecutive
     * intervals closer than `gapUs` fold together (overlaps included —
@@ -2327,34 +2137,15 @@ object Incremental {
       .withColumn("ivs", expr(gapMergeExpr("pts", gapUs))).drop("pts")
       .withColumn("shard", pmod(col("user_id"), lit(nShards)).cast("long"))
       .persist()
-    val touched = delta.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // bounded by nShards
-    if (touched.isEmpty) { delta.unpersist(blocking = false); return }
-    val bmaxByShard = shardFooterMax(spark, stateDir, "shard", "bmax")
-      .getOrElse {
-        parquetIfAny(spark, stateDir)
-          .map(_.filter(col("shard").isin(touched: _*))
-            .groupBy("shard").agg(max("bmax").as("bm"))
-            .collect().map(r => r.getAs[Number](0).longValue ->
-              r.getAs[Number](1).longValue).toMap)
-          .getOrElse(Map.empty)
-      }
-    val fresh = touched.filterNot(s => bmaxByShard.get(s).exists(_ >= batchId))
-    if (fresh.nonEmpty) {
-      def emptyState = delta.drop("pts").withColumn("bmax", lit(-1L)).limit(0)
-        .select("user_id", "ivs", "bmax", "shard")
-      val old = parquetIfAny(spark, stateDir).getOrElse(emptyState)
-        .filter(col("shard").isin(fresh: _*)) // partition-pruned
-        .select(col("user_id"), col("ivs").as("ivs_o"), col("shard"))
-        .persist()
-      old.count() // materialize before overwriting the shards it came from
-      val emptyIvs = expr(
-        "cast(array() as array<struct<s: bigint, e: bigint, n: bigint>>)")
+    val emptyIvs = expr(
+      "cast(array() as array<struct<s: bigint, e: bigint, n: bigint>>)")
+    val empty = delta.withColumn("bmax", lit(-1L))
+      .select("user_id", "ivs", "bmax", "shard").limit(0)
+    shardMerge(spark, stateDir, "shard", batchId, delta, empty) { (old, d) =>
       // interval-set merge: sort the union by (s, e), one gap sweep — a
       // late batch's interval can bridge two stored sessions into one
-      val merged = old
-        .join(delta.filter(col("shard").isin(fresh: _*))
-          .select(col("user_id"), col("ivs").as("ivs_d")),
+      old.select(col("user_id"), col("ivs").as("ivs_o"), col("shard"))
+        .join(d.select(col("user_id"), col("ivs").as("ivs_d")),
           Seq("user_id"), "full_outer")
         .select(col("user_id"),
           array_sort(concat(coalesce(col("ivs_o"), emptyIvs),
@@ -2362,12 +2153,7 @@ object Incremental {
           coalesce(col("shard"),
             pmod(col("user_id"), lit(nShards)).cast("long")).as("shard"))
         .withColumn("ivs", expr(gapMergeExpr("uni", gapUs)))
-        .select(col("user_id"), col("ivs"), lit(batchId).as("bmax"),
-          col("shard"))
-      merged.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(stateDir)
-      old.unpersist(blocking = false)
-    }
+    }.foreach(_())
     delta.unpersist(blocking = false)
   }
 
@@ -2375,7 +2161,7 @@ object Incremental {
     * one row per gap-maximal session — a row-local explode of the MV.
     */
   def sessionTable(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(servingPath(stateDir, stateDir))
+    spark.read.parquet(servingPath(spark, stateDir, stateDir))
       .select(col("user_id"), explode(col("ivs")).as("iv"))
       .select(col("user_id"), col("iv.s").as("sess_start"),
         col("iv.e").as("sess_end"), col("iv.n").as("n_events"))
@@ -2402,8 +2188,8 @@ object Incremental {
   // sharded on the key with the usual discipline: per batch, reduce the
   // batch to its last change per key (one agg), merge into the touched
   // shards only (max-struct pick — the same algebra as the curation key
-  // index, so replays are no-ops by idempotence AND skipped by the
-  // per-shard bmax guard). Rows carry the (cbatch, cseq) of their last
+  // index, so a replay is a no-op by idempotence too). Rows carry the
+  // (cbatch, cseq) of their last
   // applied change so later merges compare correctly; a winning D persists
   // as a TOMBSTONE row (filtered on read) — required by the write
   // mechanics, see the note in [[applyCdcBatch]] — and a later change
@@ -2454,7 +2240,6 @@ object Incremental {
       s"batch $batchId carries duplicate $seqCol values for one key — " +
         "the per-key winner would tie-break arbitrarily on op/payload; " +
         "assign unique per-key seqs upstream (applyCdcBatch contract)")
-    if (touched.isEmpty) { delta.unpersist(blocking = false); return }
     // zero-row state template with the DELTA's payload types. The stored
     // table KEEPS the op column: a winning D persists as a TOMBSTONE row
     // rather than being filtered out, because dynamic partition overwrite
@@ -2463,40 +2248,22 @@ object Incremental {
     // never be rewritten, and silently resurrect its old rows. The
     // tombstone also keeps (cbatch, cseq) comparable for later re-creates;
     // [[cdcTable]] filters tombstones on read.
-    def emptyState = delta.withColumn("bmax", lit(-1L)).limit(0)
-    val bmaxByShard = shardFooterMax(spark, stateDir, "shard", "bmax")
-      .getOrElse {
-        parquetIfAny(spark, stateDir).getOrElse(emptyState)
-          .filter(col("shard").isin(touched: _*))
-          .groupBy("shard").agg(max("bmax").as("bm"))
-          .collect().map(r => r.getAs[Number](0).longValue ->
-            r.getAs[Number](1).longValue).toMap
-      }
-    val fresh = touched.filterNot(s => bmaxByShard.get(s).exists(_ >= batchId))
-    if (fresh.nonEmpty) {
-      val keep = Seq(keyCol, "cbatch", "cseq", "op") ++ payload :+ "shard"
-      val old = parquetIfAny(spark, stateDir).getOrElse(emptyState)
-        .filter(col("shard").isin(fresh: _*)) // partition-pruned
-        .select(keep.head, keep.tail: _*)
-        .persist()
-      old.count() // materialize before overwriting the shards it came from
+    val keep = Seq(keyCol, "cbatch", "cseq", "op") ++ payload :+ "shard"
+    val empty = delta.withColumn("bmax", lit(-1L))
+      .select((keep.init :+ "bmax" :+ "shard").map(col): _*).limit(0)
+    shardMerge(spark, stateDir, "shard", batchId, delta, empty, touched) { (old, d) =>
       // winner per key = max (cbatch, cseq); a winning D stays as a
-      // tombstone row (see the emptyState note)
+      // tombstone row (see the template note)
       val mergeStruct = struct(Seq(col("cbatch"), col("cseq"),
         col("op")) ++ payload.map(col): _*)
-      val merged = old
-        .unionByName(delta.filter(col("shard").isin(fresh: _*))
-          .select(keep.head, keep.tail: _*))
+      old.select(keep.map(col): _*)
+        .unionByName(d.select(keep.map(col): _*))
         .groupBy(keyCol, "shard")
         .agg(max(mergeStruct).as("w"))
         .select(Seq(col(keyCol), col("w.cbatch").as("cbatch"),
           col("w.cseq").as("cseq"), col("w.op").as("op")) ++
-          payload.map(c => col(s"w.$c").as(c)) ++
-          Seq(lit(batchId).as("bmax"), col("shard")): _*)
-      merged.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(stateDir)
-      old.unpersist(blocking = false)
-    }
+          payload.map(c => col(s"w.$c").as(c)) :+ col("shard"): _*)
+    }.foreach(_())
     delta.unpersist(blocking = false)
   }
 
@@ -2504,7 +2271,7 @@ object Incremental {
     * change bookkeeping dropped.
     */
   def cdcTable(spark: SparkSession, stateDir: String, keyCol: String): DataFrame = {
-    val df = spark.read.parquet(servingPath(stateDir, stateDir))
+    val df = spark.read.parquet(servingPath(spark, stateDir, stateDir))
     df.filter(col("op") =!= "D")
       .select(keyCol, df.columns.toSeq
         .filterNot(Set(keyCol, "cbatch", "cseq", "op", "bmax", "shard")): _*)
@@ -2571,11 +2338,6 @@ object Incremental {
     else -1L
   }
 
-  private def batchDirsOf(dir: String): Seq[Long] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("batch="))
-      .map(_.getName.stripPrefix("batch=").toLong).toSeq
-
   /** The current forwarding snapshot strictly BEFORE `beforeBatch`
     * (Long.MaxValue = latest committed). Snapshots are cumulative — each
     * carries every earlier entry re-pointed — so one partition is the
@@ -2583,7 +2345,7 @@ object Incremental {
     */
   private def fwdSnapshot(spark: SparkSession, stateDir: String,
       beforeBatch: Long): DataFrame = {
-    val dirs = batchDirsOf(s"$stateDir/fwd").filter(_ < beforeBatch)
+    val dirs = batchIds(spark, s"$stateDir/fwd").filter(_ < beforeBatch)
     if (dirs.isEmpty)
       spark.emptyDataFrame.select(lit(0L).as("src_lbl"),
         lit(0L).as("dst_lbl")).limit(0)
@@ -2611,20 +2373,16 @@ object Incremental {
     // corpus size — fold it into lbl now (compactCc's global path
     // compression; crash mid-fold re-converges on retry). Both counts
     // are parquet metadata-only.
+    // footer row counts: zero Spark jobs (round-15 — these two counts were
+    // a count() job per batch each; snapshots are cumulative, so the
+    // latest partition's row count IS |fwd|)
+    def rows(dir: String) = footers(spark, dir).map(_._2).sum
+    def fwdCount(before: Long) = batchIds(spark, s"$stateDir/fwd")
+      .filter(_ < before).maxOption.fold(0L)(b => rows(s"$stateDir/fwd/batch=$b"))
     val applied0 = ccApplied(stateDir)
-    if (applied0 >= 0L) {
-      // footer row counts: zero Spark jobs (round-15 — these two counts
-      // were a count() job per batch each; snapshots are cumulative, so
-      // the latest committed partition's row count IS |fwd|)
-      val fwdDirs = batchDirsOf(s"$stateDir/fwd").filter(_ < applied0 + 1)
-      val fwdCount =
-        if (fwdDirs.isEmpty) 0L
-        else footerRowCount(spark, s"$stateDir/fwd/batch=${fwdDirs.max}")
-      if (fwdCount > fwdFoldMin) {
-        val lblCount = footerRowCount(spark, lblDir)
-        if (fwdCount > lblCount / 8) compactCc(spark, stateDir, applied0)
-      }
-    }
+    val fwdNow = if (applied0 >= 0L) fwdCount(applied0 + 1) else 0L
+    if (fwdNow > fwdFoldMin && fwdNow > rows(lblDir) / 8)
+      compactCc(spark, stateDir, applied0)
     val ec = edges.columns
     val e = edges
       .select(col(ec(0)).cast("long").as("a"), col(ec(1)).cast("long").as("b"))
@@ -2634,8 +2392,7 @@ object Incremental {
       .distinct()
       .withColumn("shard", pmod(col("v"), lit(nShards)).cast("long"))
       .persist()
-    val shards = bv.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // bounded by nShards
+    val shards = longs(bv.select("shard").distinct()) // bounded by nShards
     if (shards.isEmpty) {
       bv.unpersist(blocking = false); e.unpersist(blocking = false); return
     }
@@ -2649,11 +2406,7 @@ object Incremental {
     val fwdPrev = fwdSnapshot(spark, stateDir, batchId).persist()
     // writer-count sizing from footer metadata (zero jobs; the persist
     // fills lazily inside the first job that reads fwdPrev)
-    val fwdPrevCount = {
-      val dirs = batchDirsOf(s"$stateDir/fwd").filter(_ < batchId)
-      if (dirs.isEmpty) 0L
-      else footerRowCount(spark, s"$stateDir/fwd/batch=${dirs.max}")
-    }
+    val fwdPrevCount = fwdCount(batchId)
     // resolve each endpoint to its current root (≤ 1 hop — fwd is
     // compressed); unknown endpoints root at themselves
     val resolved = bv.select("v", "shard")
@@ -2728,28 +2481,8 @@ object Incremental {
     // note above); touched shards rewrite whole under the bmax guard
     val newLbl = resolved.filter(col("is_new"))
       .select(col("v"), col("root").as("lbl"), col("shard"))
-    val touched = newLbl.select("shard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq
-    val lblBmax = shardFooterMax(spark, lblDir, "shard", "bmax").getOrElse {
-      parquetIfAny(spark, lblDir).getOrElse(emptyLbl)
-        .filter(col("shard").isin(touched: _*))
-        .groupBy("shard").agg(max("bmax").as("bm"))
-        .collect().map(r => r.getAs[Number](0).longValue ->
-          r.getAs[Number](1).longValue).toMap
-    }
-    val fresh = touched.filterNot(s => lblBmax.get(s).exists(_ >= batchId))
-    if (fresh.nonEmpty) {
-      val old = parquetIfAny(spark, lblDir).getOrElse(emptyLbl)
-        .filter(col("shard").isin(fresh: _*)).select("v", "lbl", "shard")
-        .persist()
-      old.count() // materialize before overwriting the shards it came from
-      old.unionByName(newLbl.filter(col("shard").isin(fresh: _*)))
-        .withColumn("bmax", lit(batchId))
-        .select("v", "lbl", "bmax", "shard")
-        .repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(lblDir)
-      old.unpersist(blocking = false)
-    }
+    shardMerge(spark, lblDir, "shard", batchId, newLbl, emptyLbl)(
+      (old, d) => old.select("v", "lbl", "shard").unionByName(d)).foreach(_())
     // commit marker LAST
     java.nio.file.Files.writeString(
       new java.io.File(stateDir, "_applied").toPath, batchId.toString)
@@ -2766,7 +2499,7 @@ object Incremental {
     */
   def ccLabels(spark: SparkSession, stateDir: String): DataFrame = {
     val fwd = fwdSnapshot(spark, stateDir, ccApplied(stateDir) + 1)
-    spark.read.parquet(servingPath(stateDir, s"$stateDir/lbl"))
+    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/lbl"))
       .join(fwd, col("lbl") === col("src_lbl"), "left")
       .select(col("v").as("id"),
         coalesce(col("dst_lbl"), col("lbl")).as("cluster_id"))
@@ -2813,7 +2546,7 @@ object Incremental {
     // snapshots ≤ upToBatch are folded in; later snapshots still resolve
     // the relabeled values (their entries for already-final roots are
     // simply never matched)
-    batchDirsOf(s"$stateDir/fwd").filter(_ <= upToBatch)
+    batchIds(spark, s"$stateDir/fwd").filter(_ <= upToBatch)
       .foreach(b => deleteRec(new java.io.File(s"$stateDir/fwd/batch=$b")))
   }
 
@@ -2850,9 +2583,8 @@ object Incremental {
   // partition filters), and the verdict merge rewrites only touched doc
   // shards. Nothing ever scans history.
   //
-  // Crash-retry ordering: tg (derived from the batch alone — always
-  // recomputes bit-identically) → ver (derives from bg's OLD state;
-  // per-shard bmax guards skip applied shards) → bg LAST. If bg committed,
+  // Crash order: tg (derived from the batch alone — always recomputes
+  // bit-identically) → ver (derives from bg's OLD state) → bg LAST. If bg committed,
   // the whole batch had committed (ver precedes it) and a replay's
   // anti-join finds no new grams; if not, every delta recomputes
   // bit-identically against the unchanged bg. Same argument as
@@ -2880,7 +2612,7 @@ object Incremental {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pinLayout(stateDir, s"n=$n,nGramShards=$nGramShards,nDocShards=$nDocShards")
     // auto-compaction cadence (contract above [[compactNearDup]])
-    if (shouldAutoCompact(s"$stateDir/tg", s"$stateDir/tg_base",
+    if (shouldAutoCompact(spark, s"$stateDir/tg", s"$stateDir/tg_base",
         autoCompactMinLive))
       compactContam(spark, stateDir, batchId - 1)
     val bgDir = s"$stateDir/bg"; val tgDir = s"$stateDir/tg"
@@ -2895,8 +2627,7 @@ object Incremental {
       .withColumn("gh", xxhash64(col("gram"))).drop("gram")
       .withColumn("gshard", pmod(col("gh"), lit(nGramShards)).cast("long"))
       .persist()
-    val touchedG = grams.select("gshard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq // ≤ nGramShards
+    val touchedG = longs(grams.select("gshard").distinct()) // ≤ nGramShards
     if (touchedG.isEmpty) {
       grams.unpersist(blocking = false); b.unpersist(blocking = false); return
     }
@@ -2926,8 +2657,7 @@ object Incremental {
     // RETRO: historical training docs holding a crossing gram gain one
     // match per such gram — the read is pruned to the new grams' shards
     // and earlier batches (both partition filters)
-    val newShards = newBG.select("gshard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq
+    val newShards = longs(newBG.select("gshard").distinct())
     def emptyTg = spark.emptyDataFrame.select(lit(0L).as("gh"),
       lit(0L).as("doc_id"), lit(-1L).as("gshard"), lit(-1L).as("batch"))
       .limit(0)
@@ -2955,49 +2685,33 @@ object Incremental {
         sum(col("dm")).as("dm"))
       .withColumn("dshard", pmod(col("doc_id"), lit(nDocShards)).cast("long"))
       .persist()
-    val touchedD = verDelta.select("dshard").distinct()
-      .collect().map(_.getAs[Number](0).longValue).toSeq
-    val verBmax = shardFooterMax(spark, verDir, "dshard", "bmax").getOrElse {
-      spark.read.parquet(verDir).filter(col("dshard").isin(touchedD: _*))
-        .groupBy("dshard").agg(max("bmax").as("bm"))
-        .collect().map(r => r.getAs[Number](0).longValue ->
-          r.getAs[Number](1).longValue).toMap
+    val emptyVer = spark.emptyDataFrame.select(lit(0L).as("doc_id"),
+      lit("").as("source"), lit(0L).as("n_grams"), lit(0L).as("n_matched"),
+      lit(-1L).as("bmax"), lit(-1L).as("dshard")).limit(0)
+    val verWrite = shardMerge(spark, verDir, "dshard", batchId, verDelta,
+        emptyVer) { (verOld, d) =>
+      verOld.select(col("doc_id"), col("source").as("src_o"),
+          col("n_grams").as("ng_o"), col("n_matched").as("nm_o"),
+          col("dshard").as("dsh_o"))
+        .join(d, Seq("doc_id"), "full_outer")
+        .select(col("doc_id"),
+          coalesce(col("src_o"), col("src_d")).as("source"),
+          coalesce(col("ng_o"), col("ng_d")).as("n_grams"),
+          (coalesce(col("nm_o"), lit(0L)) + coalesce(col("dm"), lit(0L)))
+            .as("n_matched"),
+          coalesce(col("dsh_o"), col("dshard")).as("dshard"))
     }
-    val freshD = touchedD.filterNot(s => verBmax.get(s).exists(_ >= batchId))
     // tg and ver BEFORE bg, but mutually order-free (round-15: submitted
     // concurrently via runWrites, §2.6): tg is batch-only data — replays
     // overwrite bit-identically, and the retro read's `batch < batchId`
     // filter keeps a crashed attempt's own partial partitions invisible
-    // to the retry; ver is bmax-guarded per shard, so whichever of the
-    // two committed before a crash replays as a no-op / identical rewrite.
+    // to the retry; ver is bmax-guarded by the kernel.
     val writes: Seq[() => Unit] = Seq(
       () => trainG.select("gh", "doc_id", "gshard")
         .withColumn("batch", lit(batchId))
         .repartition(math.min(nGramShards, 32), col("gshard"))
         .write.mode("overwrite").partitionBy("gshard", "batch")
-        .parquet(tgDir)) ++
-      (if (freshD.isEmpty) Nil else Seq(() => {
-        val verOld = parquetIfAny(spark, verDir)
-          .getOrElse(spark.emptyDataFrame.select(lit(0L).as("doc_id"),
-            lit("").as("source"), lit(0L).as("n_grams"), lit(0L).as("n_matched"),
-            lit(-1L).as("bmax"), lit(-1L).as("dshard")).limit(0))
-          .filter(col("dshard").isin(freshD: _*)) // partition-pruned
-          .select(col("doc_id"), col("source").as("src_o"),
-            col("n_grams").as("ng_o"), col("n_matched").as("nm_o"),
-            col("dshard").as("dsh_o"))
-        val merged = verOld
-          .join(verDelta.filter(col("dshard").isin(freshD: _*)), Seq("doc_id"),
-            "full_outer")
-          .select(col("doc_id"),
-            coalesce(col("src_o"), col("src_d")).as("source"),
-            coalesce(col("ng_o"), col("ng_d")).as("n_grams"),
-            (coalesce(col("nm_o"), lit(0L)) + coalesce(col("dm"), lit(0L)))
-              .as("n_matched"),
-            lit(batchId).as("bmax"),
-            coalesce(col("dsh_o"), col("dshard")).as("dshard"))
-        merged.repartition(col("dshard"))
-          .write.mode("overwrite").partitionBy("dshard").parquet(verDir)
-      }: Unit))
+        .parquet(tgDir)) ++ verWrite
     runWrites(writes)
     // bg LAST: fold the new grams into their shards (old rows pass through
     // — the partition rewrites whole). On a replay after commit the
@@ -3025,7 +2739,7 @@ object Incremental {
     */
   def contamVerdicts(spark: SparkSession, stateDir: String,
       minMatches: Long = 1L): DataFrame =
-    spark.read.parquet(servingPath(stateDir, s"$stateDir/ver"))
+    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/ver"))
       .select(col("doc_id"), col("source"), col("n_grams"), col("n_matched"),
         (col("n_matched") >= minMatches).cast("long").as("contaminated"))
 

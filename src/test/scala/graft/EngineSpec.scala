@@ -141,4 +141,23 @@ class EngineSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows == Set((1L, 1L, 100L), (2L, 1L, 250L)))
   }
+
+  test("concurrent maintainers of different dirs restore the session AQE " +
+      "flag") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import spark.implicits._
+    val k = "spark.sql.adaptive.enabled"
+    val dir = java.nio.file.Files.createTempDirectory("graft_mergeconf2").toString
+    // two maintainers on one session, each on its own state dir: their
+    // lease entries and exits interleave
+    val runs = (0 until 2).map(t => Future {
+      (0L until 6L).foreach(b => graft.streaming.Incremental.applyBatch(spark,
+        Seq((b, 10L), (b + 7, 20L)).toDF("user_id", "cents"), b,
+        s"$dir/state$t", nShards = 4))
+    })
+    runs.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    assert(spark.conf.get(k) == "true",
+      "interleaved merges left spark.sql.adaptive.enabled off")
+  }
 }

@@ -2004,4 +2004,89 @@ class StreamingSpec extends SparkSuite {
     assert(liveBatches(da) <= 4,
       s"cadence must bound live partitions, got ${liveBatches(da)}")
   }
+
+  test("runWrites awaits every write before rethrowing a failure") {
+    import graft.streaming.Incremental
+    val sibling = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Incremental.runWrites(Seq(
+        () => throw new IllegalStateException("write failed"),
+        () => { Thread.sleep(1000); sibling.set(true) }))
+    }
+    assert(e.getMessage == "write failed")
+    // the caller's lease is released right after the throw: a sibling
+    // still running then would write past it
+    assert(sibling.get, "a sibling write was still in flight after the throw")
+  }
+
+  test("CC fold cadence ignores crash debris under _temporary/ and " +
+      ".spark-staging-*/") {
+    import graft.streaming.Incremental
+    import spark.implicits._
+    val state = java.nio.file.Files.createTempDirectory("graft_ccdebris")
+      .toString + "/state"
+    // batch 0: two components → a 2-row forwarding snapshot over 4 labels
+    Incremental.applyCcBatch(spark, Seq((1L, 2L), (5L, 6L)).toDF("a", "b"),
+      0L, state, fwdFoldMin = 2L)
+    // debris a crashed write leaves behind: copies of committed files in
+    // Spark's hidden staging dirs, which Spark's reader never sees
+    for (dir <- Seq(s"$state/fwd/batch=0", s"$state/lbl/shard=1")) {
+      val f = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val root = if (dir.contains("lbl")) s"$state/lbl" else dir
+      for (hidden <- Seq("_temporary/0", ".spark-staging-x")) {
+        val to = new java.io.File(s"$root/$hidden", f.getName)
+        to.getParentFile.mkdirs()
+        java.nio.file.Files.copy(f.toPath, to.toPath)
+      }
+    }
+    // |fwd| = 2 does not exceed fwdFoldMin = 2, so batch 1 must not fold;
+    // counting the debris (6 > 2) would fold and drop fwd/batch=0
+    Incremental.applyCcBatch(spark, Seq((2L, 5L)).toDF("a", "b"), 1L, state,
+      fwdFoldMin = 2L)
+    assert(new java.io.File(s"$state/fwd/batch=0").exists(),
+      "debris changed the fold-cadence count")
+    assert(Incremental.ccLabels(spark, state).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L))
+  }
+
+  test("shard merge without footer stats falls back to a pruned scan: " +
+      "replays never double-count") {
+    import graft.streaming.Incremental
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val state = java.nio.file.Files.createTempDirectory("graft_nostats")
+      .toString + "/state"
+    val k = "parquet.column.statistics.enabled"
+    spark.conf.set(k, "false")
+    try {
+      val b0 = Seq((1L, 100L), (2L, 200L), (2L, 5L)).toDF("user_id", "cents")
+      val b1 = Seq((2L, 7L), (3L, 300L)).toDF("user_id", "cents")
+      Incremental.applyBatch(spark, b0, 0L, state, nShards = 4)
+      Incremental.applyBatch(spark, b0, 0L, state, nShards = 4)
+      Incremental.applyBatch(spark, b1, 1L, state, nShards = 4)
+      Incremental.applyBatch(spark, b1, 1L, state, nShards = 4)
+      Incremental.applyBatch(spark, b0, 0L, state, nShards = 4)
+      // the files really lack bmax stats, so the kernel took the fallback
+      val files = new java.io.File(state).listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty)
+      for (f <- files) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath),
+            spark.sessionState.newHadoopConf()))
+        try {
+          val st = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+            .filter(_.getPath.toDotString == "bmax").map(_.getStatistics)
+          assert(st.forall(s => s == null || !s.hasNonNullValue),
+            s"$f carries bmax statistics")
+        } finally r.close()
+      }
+      val m = spark.read.parquet(state).select("user_id", "n", "cents")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(m == Map(1L -> (1L, 100L), 2L -> (3L, 212L), 3L -> (1L, 300L)))
+    } finally spark.conf.unset(k)
+  }
 }
