@@ -59,10 +59,9 @@ object Engine {
       // layouts ((shard|bp) × batch) routinely exceed the default 32 dirs,
       // so every pruned state read paid one. Driver-side listing is the
       // right call up to ~10k dirs on any fs with cheap LIST (local, HDFS,
-      // manifest-backed table formats); production object-store deployments
-      // can lower it back via SPARK_GRAFT_LIST_THRESHOLD.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
+      // manifest-backed table formats); an object-store deployment would
+      // lower it back in its own session config.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
       // 2. FileOutputCommitter v2: task output moves to the final location
       // at TASK commit (one rename) instead of being renamed again at JOB
       // commit (two). Safe here by the same argument that makes retries
@@ -72,13 +71,25 @@ object Engine {
       // (batch < bmax re-run overwrites) or repaired by the documented
       // crash-recovery paths. Standard production choice on HDFS-like
       // stores; object-store deployments swap in a cloud committer anyway.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_V", "2"))
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       // 3. No _SUCCESS markers: nothing in the engine reads them (replay
       // guards are bmax/footer-stats based), so each write was paying one
       // extra file create + one extra entry in every subsequent listing.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
         "false")
+      // Whole-stage codegen class cache, sized to the engine's working set.
+      // Spark compiles one Janino class per distinct generated source and
+      // keeps them in a JVM-wide LRU, 100 entries by default, split into 4
+      // segments of ~25. One warm incremental-MV cycle plus its checks needs
+      // ~380 distinct classes, so at the default every warm op recompiled
+      // most of its plan (~2 s of Janino per 4-op cycle). 2000 entries gives
+      // ~5x headroom; each costs ~18 KB of heap (Janino's class loader keeps
+      // the bytecode), so a full cache holds ~36 MB. A static conf, read
+      // once per JVM when codegen first builds the cache.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** The codegen class-cache size [[configure]] sets (see there). */
+  val CodegenCacheEntries = 2000
 
   /** Build a local session configured the way every graft entry point expects. */
   def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

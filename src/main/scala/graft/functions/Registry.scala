@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Registers graft's custom Catalyst expressions with a session's function
@@ -8,106 +10,66 @@ import org.apache.spark.sql.functions.{call_function, lit}
   */
 object Registry {
 
+  /** Idempotent: a name the session already holds is left as it is, so a
+    * second call neither re-registers nor logs "replaced a previously
+    * registered function".
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_product",
-      exprs =>
-        GraftProduct(org.apache.spark.sql.catalyst.expressions.Cast(
-          exprs.head, org.apache.spark.sql.types.DoubleType)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_int",
-      exprs => IntDotProduct(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64",
-      exprs => SimHash64Expr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint_portable",
-      exprs => PortableFingerprintExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_portable",
-      exprs => PortableSimHashExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_hash",
-      exprs => PortableTokenHashExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted",
-      exprs => JaccardSortedExpr(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinklerExpr(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => {
-        requireFoldable(exprs(1), "graft_minhash", "num_hashes must be a literal int")
-        MinHashSignatureExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_match_frac",
-      exprs => MatchFractionExpr(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stopword_hits",
-      exprs => {
-        requireFoldable(exprs(1), "graft_stopword_hits",
-          "word lists must be a literal array<array<string>>")
-        val ad = exprs(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val lists = (0 until ad.numElements()).map { i =>
-          val inner = ad.getArray(i)
-          (0 until inner.numElements()).map(j => inner.getUTF8String(j).toString)
-        }
-        StopwordHitsExpr(exprs(0), lists)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_fracs",
-      exprs => {
-        requireFoldable(exprs(1), "graft_dup_fracs",
-          "ns must be a literal array<int>")
-        requireFoldable(exprs(2), "graft_dup_fracs",
-          "strides must be a literal array<int>")
-        val ns = exprs(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()
-        val strides = exprs(2).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()
-        require(ns.length == strides.length,
-          "graft_dup_fracs: ns and strides must have the same length")
-        NgramDupFracsExpr(exprs(0), ns.zip(strides).toSeq)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_shingles",
-      exprs => {
-        requireFoldable(exprs(1), "graft_word_shingles",
-          "shingle size must be a literal int")
-        WordShinglesExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_explode",
-      exprs => {
-        requireFoldable(exprs(1), "graft_shingle_explode",
-          "shingle size must be a literal int")
-        ShingleExplodeExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc",
-      exprs => NfcNormalizeExpr(exprs.head),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def define(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    define("graft_product", exprs =>
+      GraftProduct(org.apache.spark.sql.catalyst.expressions.Cast(
+        exprs.head, org.apache.spark.sql.types.DoubleType)).toAggregateExpression())
+    define("graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
+    define("graft_dot_int", exprs => IntDotProduct(exprs(0), exprs(1)))
+    define("graft_simhash64", exprs => SimHash64Expr(exprs.head))
+    define("graft_fingerprint_portable", exprs => PortableFingerprintExpr(exprs.head))
+    define("graft_simhash_portable", exprs => PortableSimHashExpr(exprs.head))
+    define("graft_token_hash", exprs => PortableTokenHashExpr(exprs.head))
+    define("graft_jaccard_sorted", exprs => JaccardSortedExpr(exprs(0), exprs(1)))
+    define("graft_jaro_winkler", exprs => JaroWinklerExpr(exprs(0), exprs(1)))
+    define("graft_minhash", exprs => {
+      requireFoldable(exprs(1), "graft_minhash", "num_hashes must be a literal int")
+      MinHashSignatureExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
+    })
+    define("graft_match_frac", exprs => MatchFractionExpr(exprs(0), exprs(1)))
+    define("graft_stopword_hits", exprs => {
+      requireFoldable(exprs(1), "graft_stopword_hits",
+        "word lists must be a literal array<array<string>>")
+      val ad = exprs(1).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val lists = (0 until ad.numElements()).map { i =>
+        val inner = ad.getArray(i)
+        (0 until inner.numElements()).map(j => inner.getUTF8String(j).toString)
+      }
+      StopwordHitsExpr(exprs(0), lists)
+    })
+    define("graft_dup_fracs", exprs => {
+      requireFoldable(exprs(1), "graft_dup_fracs",
+        "ns must be a literal array<int>")
+      requireFoldable(exprs(2), "graft_dup_fracs",
+        "strides must be a literal array<int>")
+      val ns = exprs(1).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()
+      val strides = exprs(2).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()
+      require(ns.length == strides.length,
+        "graft_dup_fracs: ns and strides must have the same length")
+      NgramDupFracsExpr(exprs(0), ns.zip(strides).toSeq)
+    })
+    define("graft_word_shingles", exprs => {
+      requireFoldable(exprs(1), "graft_word_shingles",
+        "shingle size must be a literal int")
+      WordShinglesExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
+    })
+    define("graft_shingle_explode", exprs => {
+      requireFoldable(exprs(1), "graft_shingle_explode",
+        "shingle size must be a literal int")
+      ShingleExplodeExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
+    })
+    define("graft_nfc", exprs => NfcNormalizeExpr(exprs.head))
     // INPUT CONTRACT: the token array must be NULL-FREE (tokenize with
     // graft's portable tokenizer / TextFns.portableTokens, which guarantees
     // it) — a null element throws at runtime rather than hashing to a
@@ -116,14 +78,11 @@ object Registry {
     // string-window mirror (two distinct windows verifying as one string).
     // Every in-repo call site (Dedup.scrubBoilerplate /
     // scrubDuplicateSpans, Incremental.applySpanBatch) satisfies this.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      exprs => {
-        requireFoldable(exprs(1), "graft_shingle_hashes",
-          "shingle size must be a literal int")
-        ShingleHashesExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
-      },
-      "built-in")
+    define("graft_shingle_hashes", exprs => {
+      requireFoldable(exprs(1), "graft_shingle_hashes",
+        "shingle size must be a literal int")
+      ShingleHashesExpr(exprs(0), exprs(1).eval().asInstanceOf[Int])
+    })
   }
 
   /** SQL-surface guard: these builders eval() an argument at resolution time,

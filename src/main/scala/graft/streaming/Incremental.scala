@@ -99,7 +99,7 @@ object Incremental {
       nShards: Int = 16): DataFrame = {
     maintainLoop(spark, srcDir, checkpointDir, schema)(
       applyBatch(spark, _, _, stateDir, nShards))
-    spark.read.parquet(servingPath(spark, stateDir, stateDir))
+    readSurface(spark, servingPath(spark, stateDir, stateDir))
       .select("user_id", "n", "cents")
   }
 
@@ -420,19 +420,25 @@ object Incremental {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     dataFiles(spark, dir).map { case (segs, st) =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try {
-        val stats = reader.getFooter.getBlocks.asScala.toSeq
-          .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == column))
-          .map(_.getStatistics)
-        val mx =
-          if (stats.exists(s => s == null || !s.hasNonNullValue)) None
-          else Some(stats.map(_.genericGetMax.asInstanceOf[Number].longValue)
-            .foldLeft(Long.MinValue)(math.max))
-        (segs, reader.getRecordCount, mx)
-      } finally reader.close()
+      val blocks = footer(conf, st).getBlocks.asScala.toSeq
+      val stats = blocks
+        .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == column))
+        .map(_.getStatistics)
+      val mx =
+        if (stats.exists(s => s == null || !s.hasNonNullValue)) None
+        else Some(stats.map(_.genericGetMax.asInstanceOf[Number].longValue)
+          .foldLeft(Long.MinValue)(math.max))
+      (segs, blocks.map(_.getRowCount).sum, mx)
     }.toSeq
+  }
+
+  /** One data file's parquet footer, read on the driver. */
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      st: org.apache.hadoop.fs.FileStatus)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try reader.getFooter finally reader.close()
   }
 
   /** Distinct `batch=` partition values anywhere under `dir`. */
@@ -863,10 +869,27 @@ object Incremental {
 
   /** The surface at `path`, when it holds at least one parquet data file —
     * an empty dynamic-overwrite write leaves a dir with no partitions,
-    * which breaks schema inference on a bare read.
+    * which breaks schema inference on a bare read. The data schema comes
+    * from that first file's footer, read on the driver, so the read starts
+    * no schema-inference job. Spark's precedence applies (the stored Spark
+    * schema, else the converted parquet schema). Partition columns are not
+    * in the footer, so partition discovery types them as on a bare read.
     */
   private[graft] def parquetIfAny(spark: SparkSession, path: String): Option[DataFrame] =
-    if (dataFiles(spark, path).hasNext) Some(spark.read.parquet(path)) else None
+    dataFiles(spark, path).nextOption().map { case (_, st) =>
+      import org.apache.spark.sql.execution.datasources.parquet._
+      val meta = footer(spark.sessionState.newHadoopConf(), st)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(st.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        .parquet(path)
+    }
+
+  /** A serving read of the surface at `path`: [[parquetIfAny]], or a bare
+    * read — and its error — when `path` holds no data file.
+    */
+  private def readSurface(spark: SparkSession, path: String): DataFrame =
+    parquetIfAny(spark, path).getOrElse(spark.read.parquet(path))
 
   /** Promote `_<name>.tmp` over `<name>` under `parent` with the
     * retire-rename discipline (the foldBatches crash contract): a stale
@@ -1584,7 +1607,7 @@ object Incremental {
     */
   def spanVerdicts(spark: SparkSession, stateDir: String,
       n: Int = 15): DataFrame =
-    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/cov"))
+    readSurface(spark, servingPath(spark, stateDir, s"$stateDir/cov"))
       .withColumn("covered", expr(
         s"""aggregate(starts, named_struct('a', 0L, 'e', -1L),
            |  (s, x) -> named_struct(
@@ -1622,7 +1645,7 @@ object Incremental {
       sum("d_dedup").as("after_dedup")) ++
       stages.zip(outNames).map { case (st, o) => sum(s"d_$st").as(o) } :+
       sum("d_tokens").as("kept_tokens")
-    spark.read.parquet(servingPath(spark, deltaDir, deltaDir))
+    readSurface(spark, servingPath(spark, deltaDir, deltaDir))
       .groupBy("source").agg(aggs.head, aggs.tail: _*)
   }
 
@@ -1661,7 +1684,7 @@ object Incremental {
           numHashes = bands * rowsPerBand).as("sig"))
       applyNearDupBatch(spark, nd, id, s"$stateDir/nd", bands,
         rowsPerBand, thresholdPct)
-      val ndKept = spark.read.parquet(s"$stateDir/nd/decisions")
+      val ndKept = readSurface(spark, s"$stateDir/nd/decisions")
         .filter(col("batch") === id)
         .select(col("doc_id"), col("kept").as("ok_nd"))
       applyCurationBatch(spark, curEnrich(bt).join(ndKept, Seq("doc_id")),
@@ -1714,8 +1737,8 @@ object Incremental {
       n: Int = 15): DataFrame = {
     val head = curationReport(spark, s"$stateDir/delta")
       .select("source", "docs_in", "after_dedup", "after_rules")
-    val surv = spark.read
-      .parquet(servingPath(spark, s"$stateDir/key", s"$stateDir/key"))
+    val surv = readSurface(spark,
+      servingPath(spark, s"$stateDir/key", s"$stateDir/key"))
       .select("doc_id", "source", "n_words", "ok_rules", "ok_clf")
     val sv = surv
       .join(spanVerdicts(spark, s"$stateDir/span", n)
@@ -2063,7 +2086,7 @@ object Incremental {
 
   /** The materialized join rows: key + both sides' payloads. */
   def joinMv(spark: SparkSession, stateDir: String, keyCol: String): DataFrame = {
-    val df = spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/mv"))
+    val df = readSurface(spark, servingPath(spark, stateDir, s"$stateDir/mv"))
     df.select(keyCol, df.columns.toSeq
       .filterNot(Set(keyCol, "bmax", "shard")): _*)
   }
@@ -2161,7 +2184,7 @@ object Incremental {
     * one row per gap-maximal session — a row-local explode of the MV.
     */
   def sessionTable(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(servingPath(spark, stateDir, stateDir))
+    readSurface(spark, servingPath(spark, stateDir, stateDir))
       .select(col("user_id"), explode(col("ivs")).as("iv"))
       .select(col("user_id"), col("iv.s").as("sess_start"),
         col("iv.e").as("sess_end"), col("iv.n").as("n_events"))
@@ -2271,7 +2294,7 @@ object Incremental {
     * change bookkeeping dropped.
     */
   def cdcTable(spark: SparkSession, stateDir: String, keyCol: String): DataFrame = {
-    val df = spark.read.parquet(servingPath(spark, stateDir, stateDir))
+    val df = readSurface(spark, servingPath(spark, stateDir, stateDir))
     df.filter(col("op") =!= "D")
       .select(keyCol, df.columns.toSeq
         .filterNot(Set(keyCol, "cbatch", "cseq", "op", "bmax", "shard")): _*)
@@ -2349,7 +2372,7 @@ object Incremental {
     if (dirs.isEmpty)
       spark.emptyDataFrame.select(lit(0L).as("src_lbl"),
         lit(0L).as("dst_lbl")).limit(0)
-    else spark.read.parquet(s"$stateDir/fwd/batch=${dirs.max}")
+    else readSurface(spark, s"$stateDir/fwd/batch=${dirs.max}")
       .select("src_lbl", "dst_lbl")
   }
 
@@ -2499,7 +2522,7 @@ object Incremental {
     */
   def ccLabels(spark: SparkSession, stateDir: String): DataFrame = {
     val fwd = fwdSnapshot(spark, stateDir, ccApplied(stateDir) + 1)
-    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/lbl"))
+    readSurface(spark, servingPath(spark, stateDir, s"$stateDir/lbl"))
       .join(fwd, col("lbl") === col("src_lbl"), "left")
       .select(col("v").as("id"),
         coalesce(col("dst_lbl"), col("lbl")).as("cluster_id"))
@@ -2532,7 +2555,7 @@ object Incremental {
     val lblDir = s"$stateDir/lbl"
     val fwd = fwdSnapshot(spark, stateDir, upToBatch + 1).persist()
     if (fwd.count() > 0) {
-      val relabeled = spark.read.parquet(lblDir)
+      val relabeled = readSurface(spark, lblDir)
         .join(fwd, col("lbl") === col("src_lbl"), "left")
         .select(col("v"), coalesce(col("dst_lbl"), col("lbl")).as("lbl"),
           col("bmax"), col("shard"))
@@ -2739,7 +2762,7 @@ object Incremental {
     */
   def contamVerdicts(spark: SparkSession, stateDir: String,
       minMatches: Long = 1L): DataFrame =
-    spark.read.parquet(servingPath(spark, stateDir, s"$stateDir/ver"))
+    readSurface(spark, servingPath(spark, stateDir, s"$stateDir/ver"))
       .select(col("doc_id"), col("source"), col("n_grams"), col("n_matched"),
         (col("n_matched") >= minMatches).cast("long").as("contaminated"))
 

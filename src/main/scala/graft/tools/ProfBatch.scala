@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * applyNearDupBatch / applySpanBatch calls with a listener that prints
   * every Spark job's wall, task count, and the phase label active at
   * submit — so the ~13 jobs/batch ProfInc counts become attributable to
-  * specific actions (touched-collect, delta write, state write, …).
+  * specific actions (touched-collect, delta write, state write, …), and
+  * each phase's codegen compile count and time.
   * Not part of the library surface.
   */
 object ProfBatch {
@@ -67,10 +68,19 @@ object ProfBatch {
         .withColumn("ok_clf", (col("x") % 2 === 0).cast("long"))
         .select("doc_id", "source", "norm_key", "n_words", "ok_rules", "ok_clf")
     }
+    // Each phase also prints its Janino compiles (count and time), so a
+    // slide back into per-batch recompilation shows without a profiler.
+    def compiles = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     def time[T](label: String)(f: => T): T = {
       log.phase = label
+      val (n0, c0) = compiles
       val t0 = System.nanoTime(); val r = f
-      println(f"PROFBATCH phase=$label wall=${(System.nanoTime() - t0) / 1e9}%6.3f s")
+      val wall = (System.nanoTime() - t0) / 1e9
+      val (n1, c1) = compiles
+      println(f"PROFBATCH phase=$label wall=$wall%6.3f s" +
+        f"  compiles=${n1 - n0}%3d compile=${(c1 - c0) / 1e6}%7.1f ms")
       r
     }
 

@@ -160,4 +160,41 @@ class EngineSpec extends SparkSuite {
     assert(spark.conf.get(k) == "true",
       "interleaved merges left spark.sql.adaptive.enabled off")
   }
+
+  test("codegen class cache holds the engine's working set: a plan re-run " +
+      "after 200 distinct plans does not recompile") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a static conf: set on a session built after the JVM's first one, it
+    // would be silently ignored
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Engine.CodegenCacheEntries.toString)
+    // each long literal is inlined into the generated source, so every
+    // plan compiles its own class; Spark's default 100-entry cache evicts
+    // the first one long before the loop ends
+    def run(i: Int) =
+      spark.range(4).select((col("id") * lit(1000L + i)).as("x")).collect()
+    run(0)
+    (1 to 200).foreach(run)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(0).map(_.getLong(0)).toSeq == Seq(0L, 1000L, 2000L, 3000L))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
+      "re-running a cached plan recompiled it")
+  }
+
+  test("Registry.register is idempotent: a second call leaves every " +
+      "registration as it was") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    def snapshot() = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+      .map(f => f -> reg.lookupFunction(f).get).toMap
+    graft.functions.Registry.register(spark)
+    val first = snapshot()
+    assert(first.contains(FunctionIdentifier("graft_dot")))
+    graft.functions.Registry.register(spark)
+    val second = snapshot()
+    assert(second.keySet == first.keySet)
+    // a re-registration would install a fresh ExpressionInfo
+    assert(first.forall { case (f, info) => second(f) eq info },
+      "a second register replaced a registered function")
+  }
 }

@@ -2089,4 +2089,115 @@ class StreamingSpec extends SparkSuite {
       assert(m == Map(1L -> (1L, 100L), 2L -> (3L, 212L), 3L -> (1L, 300L)))
     } finally spark.conf.unset(k)
   }
+
+  /** Every state surface under `root` (a dir holding data files directly
+    * or under `k=v` partition dirs), plus its first partition leaf — the
+    * dirs serving reads take. `_`/`.` dirs are skipped, as Spark does.
+    */
+  private def surfaceDirs(root: java.io.File): Seq[java.io.File] = {
+    def visible(f: java.io.File) = !"_.".contains(f.getName.head)
+    def kids(d: java.io.File) =
+      Option(d.listFiles()).toSeq.flatten.filter(visible).sortBy(_.getName)
+    def parts(d: java.io.File) =
+      kids(d).filter(f => f.isDirectory && f.getName.contains("="))
+    def hasData(d: java.io.File): Boolean =
+      kids(d).exists(f => f.isFile && f.getName.endsWith(".parquet")) ||
+        parts(d).exists(hasData)
+    def leaf(d: java.io.File): java.io.File =
+      parts(d).find(hasData).fold(d)(leaf)
+    if (hasData(root)) Seq(root, leaf(root)).distinct
+    else kids(root).filter(_.isDirectory).flatMap(surfaceDirs)
+  }
+
+  test("state reads take their schema from a footer: equal to a bare " +
+      "read on every surface of every family") {
+    import graft.streaming.Incremental
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft_footschema")
+      .toString
+    def check(): Unit = {
+      val dirs = surfaceDirs(new java.io.File(work))
+      assert(dirs.size >= 20, dirs)
+      for (d <- dirs) {
+        val got = Incremental.parquetIfAny(spark, d.getPath)
+        assert(got.isDefined, d)
+        assert(got.get.schema == spark.read.parquet(d.getPath).schema,
+          s"schema differs at $d")
+      }
+    }
+    Incremental.applyBatch(spark, Seq((1L, 100L), (6L, 5L))
+      .toDF("user_id", "cents"), 0L, s"$work/agg", nShards = 4)
+    val cur = Seq((10L, "s0", "kA", 100L, 1L, 1L), (20L, "s1", "kB", 50L, 1L, 0L))
+      .toDF("doc_id", "source", "norm_key", "n_words", "ok_rules", "ok_clf")
+    Incremental.applyCurationBatch(spark, cur, 0L, s"$work/cur/key",
+      s"$work/cur/delta", nShards = 4)
+    Incremental.applyCurationBatch(spark, cur.withColumn("doc_id",
+      col("doc_id") - 5), 1L, s"$work/cur/key", s"$work/cur/delta", nShards = 4)
+    val texts = Seq((0L, "alpha beta gamma delta epsilon zeta"),
+      (1L, "one two three four five six seven"),
+      (2L, "one two three four five six seven"))
+      .toDF("doc_id", "text").withColumn("source", lit("s"))
+    def nd(b: Long) = Incremental.applyNearDupBatch(spark,
+      texts.select((col("doc_id") + b * 10).as("doc_id"), col("source"),
+        graft.llm.Dedup.minhashSignature(col("text"), numHashes = 8).as("sig")),
+      b, s"$work/nd", bands = 4, rowsPerBand = 2, thresholdPct = 70, nBp = 4)
+    nd(0L); nd(1L)
+    Incremental.applyJoinBatch(spark, Seq[(Long, String, java.lang.Long, String)](
+      (1L, "l", 10L, null), (1L, "o", null, "x")).toDF("okey", "side", "lv", "ov"),
+      0L, s"$work/join", "okey", Seq("lv"), Seq("ov"), nShards = 4)
+    Incremental.applySessionBatch(spark, Seq((1L, 0L), (2L, 5L))
+      .toDF("user_id", "ts_us"), 0L, s"$work/sess", nShards = 4)
+    Incremental.applyCdcBatch(spark, Seq((1L, "I", 0L, "a"))
+      .toDF("k", "op", "seq", "v"), 0L, s"$work/cdc", "k", nShards = 4)
+    Incremental.applyCcBatch(spark, Seq((1L, 2L), (5L, 6L)).toDF("a", "b"),
+      0L, s"$work/cc", nShards = 4)
+    Incremental.applyCcBatch(spark, Seq((2L, 5L)).toDF("a", "b"), 1L,
+      s"$work/cc", nShards = 4)
+    Incremental.applySpanBatch(spark, texts, 0L, s"$work/span", n = 3,
+      nGramShards = 4, nDocShards = 4)
+    Incremental.applyContamBatch(spark, texts.withColumn("is_eval",
+      col("doc_id") === 2), 0L, s"$work/contam", n = 3, nGramShards = 4,
+      nDocShards = 4)
+    check()
+    Incremental.compactNearDup(spark, s"$work/nd", upToBatch = 1L)
+    assert(new java.io.File(s"$work/nd/decisions_base").exists())
+    check()
+  }
+
+  test("near-dup decisions and the curation report start no " +
+      "schema-inference job") {
+    import graft.streaming.Incremental
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft_noinfer")
+      .toString
+    Incremental.applyNearDupBatch(spark, Seq((0L, "s", "a b c d e f"))
+      .toDF("doc_id", "source", "text").select(col("doc_id"), col("source"),
+        graft.llm.Dedup.minhashSignature(col("text"), numHashes = 8).as("sig")),
+      0L, s"$work/nd", bands = 4, rowsPerBand = 2, thresholdPct = 70, nBp = 4)
+    Incremental.applyCurationBatch(spark, Seq((10L, "s0", "kA", 100L, 1L, 1L))
+      .toDF("doc_id", "source", "norm_key", "n_words", "ok_rules", "ok_clf"),
+      0L, s"$work/key", s"$work/delta", nShards = 4)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        j.stageInfos.foreach(st => stages.add(st.name))
+    }
+    org.apache.spark.sql.graftbridge.ColumnBridge
+      .waitListenerBusEmpty(spark.sparkContext, 30000)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(Incremental.ndDecisions(spark, s"$work/nd").collect().length == 1)
+      assert(Incremental.curationReport(spark, s"$work/delta").collect()
+        .length == 1)
+      org.apache.spark.sql.graftbridge.ColumnBridge
+        .waitListenerBusEmpty(spark.sparkContext, 30000)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    assert(!stages.isEmpty)
+    assert(!stages.asScala.exists(_.startsWith("parquet at")),
+      stages.asScala.mkString("; "))
+  }
 }
